@@ -20,17 +20,19 @@ def _int_env(name: str, default: int) -> int:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """All knobs in one place; defaults target local[32] dev, but every
-    value is chosen to remain valid on a multi-executor cluster."""
+    """All knobs in one place; defaults size themselves to the local
+    core count, and every value stays valid on a multi-executor cluster."""
 
     app_name: str = "edu-online-spark"
     # local[$SPARK_GRAFT_CPUS]; on a real cluster the master URL comes
     # from spark-submit and this is ignored.
     cpus: int = field(default_factory=lambda: _int_env("SPARK_GRAFT_CPUS", 32))
-    # One shuffle partition per core locally; at 100 TB you raise this to
-    # ~2-3x total cores (AQE coalesces the excess at runtime).
+    # One shuffle partition per core (0 = `cpus`). AQE does not run inside
+    # streaming micro-batches, so every trigger pays the full count (one
+    # state store per partition per stateful operator); raise it only for
+    # batch work at scale (~2-3x total cores), where AQE coalesces the excess.
     shuffle_partitions: int = field(
-        default_factory=lambda: _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
+        default_factory=lambda: _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 0)
     )
     # 128 MiB split target keeps scan tasks uniform at any scale factor.
     max_partition_bytes: str = "134217728"
@@ -54,6 +56,10 @@ class EngineConfig:
     # Fixed questions-per-knowledge-point denominator from the reference
     # (QzPointStreaming.scala:171).
     questions_per_point: int = 30
+
+    def __post_init__(self) -> None:
+        if self.shuffle_partitions <= 0:
+            object.__setattr__(self, "shuffle_partitions", self.cpus)
 
 
 DEFAULT = EngineConfig()

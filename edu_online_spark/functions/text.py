@@ -48,16 +48,6 @@ def tokens(col: Column | str) -> Column:
 SPREAD_MAX_INPUT_BYTES_CONF = "spark.edu_online.spread.maxInputBytes"
 _SPREAD_DEFAULT_MAX_BYTES = 128 * 1024 * 1024
 
-# Optimization r17 (VERDICT r16 #2): several operators in one query
-# path probe the SAME file set (e.g. a shingle pass and a signature
-# pass over one documents scan), and each probe is driver-side work —
-# a JVM inputFiles() walk plus one getsize() syscall per file. The
-# total-size answer depends only on the file set, so memoize it
-# (bounded; parquet inputs are immutable within a session — the same
-# reason the driver's own file-listing cache is sound).
-_SPREAD_SIZE_CACHE: dict[tuple[str, ...], int | None] = {}
-_SPREAD_SIZE_CACHE_MAX = 256
-
 
 def spread_small_scan(df, *part_cols: str):
     """Scale-adaptive scan spread (guide §2 — derive partitioning from
@@ -84,27 +74,14 @@ def spread_small_scan(df, *part_cols: str):
         return df
     import os
 
-    key = tuple(sorted(files))
-    if key in _SPREAD_SIZE_CACHE:
-        total = _SPREAD_SIZE_CACHE[key]
-        if total is None:  # remote/unstattable: previously passed through
-            return df
-    else:
-        total = 0
-        for f in files:
-            path = f[5:] if f.startswith("file:") else f
-            if not path.startswith("/"):
-                total = None  # remote storage: splits are the cluster's job
-                break
-            try:
-                total += os.path.getsize(path)
-            except OSError:
-                total = None
-                break
-        if len(_SPREAD_SIZE_CACHE) >= _SPREAD_SIZE_CACHE_MAX:
-            _SPREAD_SIZE_CACHE.clear()
-        _SPREAD_SIZE_CACHE[key] = total
-        if total is None:
+    total = 0
+    for f in files:
+        path = f[5:] if f.startswith("file:") else f
+        if not path.startswith("/"):
+            return df  # remote storage: splits are the cluster's job
+        try:
+            total += os.path.getsize(path)
+        except OSError:
             return df
     spark = df.sparkSession
     try:

@@ -16,9 +16,9 @@ from .config import DEFAULT, EngineConfig
 def get_spark(cfg: EngineConfig = DEFAULT, extra: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    Tuned for local[N] development but scale-safe: the same conf ships
-    unchanged to a 1000-executor cluster — only master URL and
-    shuffle-partition count change (via spark-submit / env).
+    local[cfg.cpus] with one shuffle partition per core (streaming
+    micro-batches run without AQE, so they pay exactly that count). On a
+    cluster only the master URL and partition count change (spark-submit / env).
     """
     builder = (
         SparkSession.builder.appName(cfg.app_name)

@@ -34,22 +34,19 @@ DEFAULT_UPSERT_BUCKETS = 64
 
 def pin_batch(write_fn):
     """Persist the micro-batch for the duration of a foreachBatch body
-    (optimization r17, guide §5 reuse-vs-recompute — VERDICT r16 #6).
+    (guide §5 reuse-vs-recompute).
 
-    For MULTI-PASS bodies only: the keyed-upsert merge runs four
-    actions on the batch (guard, touched-bucket collect, the anti-join
-    side, the union side), and the cumulative-snapshot jobs re-read it
-    against their standing state — each action on an UNPERSISTED
-    foreachBatch frame re-executes the trigger's whole plan, stateful
-    aggregation included. Measured per-trigger at 3k rows
-    (tools/stream_trigger_profile.py, committed before/after JSON):
-    register_totals 2991 → 2014 ms, quiz_mastery 3708 → 2540,
-    register_windowed 3841 → 1952. Single-pass bodies (isEmpty guard +
-    one write, e.g. parquet_append) are deliberately NOT wrapped: the
-    guard is a cheap take(1) while persist forces a full cached
-    materialization — measured a ~0.1-0.25 s/trigger REGRESSION on
-    page_flow/rawlog_archive, so pinning there costs, not saves.
-    Unpersist in finally so no blocks outlive the trigger."""
+    For MULTI-PASS bodies only: the cumulative-snapshot jobs re-read the
+    batch against their standing state, and each action on an
+    UNPERSISTED foreachBatch frame re-executes the trigger's whole
+    plan, stateful aggregation included. (parquet_upsert caches its
+    own deduplicated, bucketed frame instead.) Single-pass bodies
+    (isEmpty guard + one write, e.g. parquet_append) are deliberately
+    NOT wrapped: the guard is a cheap take(1) while persist forces a
+    full cached materialization — measured (at 32 shuffle partitions) a
+    ~0.1-0.25 s/trigger REGRESSION on page_flow/rawlog_archive, so
+    pinning there costs, not saves. Unpersist in finally so no blocks
+    outlive the trigger."""
 
     def pinned(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
@@ -71,8 +68,8 @@ def parquet_upsert(path: str, key_cols: list[str], num_buckets: int = DEFAULT_UP
 
       1. hash the batch keys → the set of AFFECTED buckets (collected
          to the driver: ≤ N ints);
-      2. read ONLY those partition dirs (partition pruning on the
-         `_bucket` filter — untouched buckets are never opened);
+      2. read ONLY those partition dirs, by path and with the batch's
+         schema — untouched buckets are never listed or opened;
       3. anti-join old rows on the keys, union the batch (new wins);
       4. write the merged buckets to a STAGING dir, hard-link every
          untouched bucket dir in beside them (metadata-only, O(#files)
@@ -98,52 +95,62 @@ def parquet_upsert(path: str, key_cols: list[str], num_buckets: int = DEFAULT_UP
     """
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+        # dedup + hash ONCE: the bucket collect, the anti-join side and
+        # the union side all read this cached frame, so the trigger's
+        # plan (stateful aggregation included) runs a single time
         keyed = batch.dropDuplicates(key_cols).withColumn(
             "_bucket",
             F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(num_buckets)).cast(
                 "int"
             ),
-        )
-        staging = path + ".__staging__"
-        retired = path + ".__retired__"
-        _recover_half_commit(path, staging, retired)
-        if os.path.exists(path):
+        ).persist()
+        try:
             buckets = [r[0] for r in keyed.select("_bucket").distinct().collect()]
-            old = spark.read.parquet(path).filter(F.col("_bucket").isin(buckets))
-            merged = old.join(
-                keyed.select(*key_cols), key_cols, "left_anti"
-            ).unionByName(keyed)
-            # cluster by bucket before writing: partitionBy alone emits
-            # one file per (task × bucket) — up to shuffle.partitions ×
-            # num_buckets tiny files per trigger, which the NEXT
-            # trigger's merge then re-reads (measured: the file churn,
-            # not the merge, dominated per-trigger cost ~8×). One
-            # bucket-hashed shuffle of the touched rows → ~1 file per
-            # bucket dir, steady-state.
-            # reads the live dir, writes the staging dir — no overlap
-            merged.repartition(num_buckets, "_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(staging)
-            touched = {f"_bucket={b}" for b in buckets}
-            for entry in os.listdir(path):
-                src = os.path.join(path, entry)
-                if (
-                    entry.startswith("_bucket=")
-                    and entry not in touched
-                    and os.path.isdir(src)
-                ):
-                    _link_tree(src, os.path.join(staging, entry))
-            _swap_into_place(path, staging, retired)
-        else:
-            keyed.repartition(num_buckets, "_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(staging)
-            os.rename(staging, path)
+            if buckets:
+                _merge_buckets(path, key_cols, keyed, buckets)
+        finally:
+            keyed.unpersist()
 
-    return pin_batch(write)
+    return write
+
+
+def _merge_buckets(
+    path: str, key_cols: list[str], keyed: DataFrame, buckets: list[int]
+) -> None:
+    """Steps 2-4 of parquet_upsert for a non-empty keyed batch."""
+    staging = path + ".__staging__"
+    retired = path + ".__retired__"
+    _recover_half_commit(path, staging, retired)
+    touched = {f"_bucket={b}" for b in buckets}
+    live = sorted(d for d in touched if os.path.isdir(os.path.join(path, d)))
+    merged = keyed
+    if live:
+        # read ONLY the touched bucket dirs, with the known schema (no
+        # footer-inference job); reads the live dir, writes staging
+        old = (
+            keyed.sparkSession.read.schema(keyed.schema)
+            .option("basePath", path)
+            .parquet(*[os.path.join(path, d) for d in live])
+        )
+        merged = old.join(keyed.select(*key_cols), key_cols, "left_anti").unionByName(
+            keyed
+        )
+    # cluster by bucket before writing: partitionBy alone emits one file
+    # per (task × bucket) — tiny files the NEXT trigger's merge re-reads.
+    # Hash-partitioning on `_bucket` puts each bucket in one task, so
+    # each bucket dir gets exactly one file, with one task per shuffle
+    # partition rather than per bucket.
+    merged.repartition("_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(
+        staging
+    )
+    if not os.path.exists(path):
+        os.rename(staging, path)
+        return
+    for entry in os.listdir(path):
+        src = os.path.join(path, entry)
+        if entry.startswith("_bucket=") and entry not in touched and os.path.isdir(src):
+            _link_tree(src, os.path.join(staging, entry))
+    _swap_into_place(path, staging, retired)
 
 
 def _recover_half_commit(path: str, staging: str, retired: str) -> None:

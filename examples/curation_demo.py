@@ -42,7 +42,7 @@ from edu_online_spark.sources.layout import write_zordered
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/edu-online-curated"
-    spark = get_spark(EngineConfig(cpus=8, shuffle_partitions=8))
+    spark = get_spark(EngineConfig(cpus=8))
 
     docs = load_table(spark, sf_dir, "documents")
     n_raw = docs.count()

@@ -86,7 +86,7 @@ def build_events(spark):
 
 
 def main():
-    spark = get_spark(EngineConfig(cpus=8, shuffle_partitions=8))
+    spark = get_spark(EngineConfig(cpus=8))
     ev = build_events(spark).localCheckpoint(eager=True)
 
     print("=== 1. SRM guard (must PASS before reading anything) ===")

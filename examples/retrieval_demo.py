@@ -38,7 +38,7 @@ from edu_online_spark.sources import load_table
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(EngineConfig(cpus=8, shuffle_partitions=8))
+    spark = get_spark(EngineConfig(cpus=8))
 
     docs = load_table(spark, sf_dir, "documents")
     embs = load_table(spark, sf_dir, "embeddings")

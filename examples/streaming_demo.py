@@ -64,7 +64,7 @@ def main() -> None:
     ])
     produce(topics["raw"], "b1.log", ["raw-payload-1", "raw-payload-2"])
 
-    spark = get_spark(EngineConfig(cpus=8, shuffle_partitions=8))
+    spark = get_spark(EngineConfig(cpus=8))
     out = {k: f"{work}/out/{k}" for k in ("windows", "totals", "mastery", "flows", "archive")}
     ck = lambda name: f"{work}/ck/{name}"
 

@@ -17,7 +17,7 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    cfg = EngineConfig(cpus=8, shuffle_partitions=8)
+    cfg = EngineConfig(cpus=8)
     s = get_spark(cfg)
     yield s
 

@@ -45,6 +45,9 @@ def test_parquet_upsert_touches_only_affected_buckets(spark, tmp_path):
 
     changed = [d for d in before if after[d] != before[d]]
     assert len(changed) == 1  # only key3's bucket was rewritten
+    # the write clusters by bucket: every bucket dir holds ONE file
+    for d, files in after.items():
+        assert len([f for f, _ in files if f.endswith(".parquet")]) == 1, d
     # value actually updated, nothing lost
     rows = {r["k"]: r["v"] for r in spark.read.parquet(out).collect()}
     assert rows["key3"] == 999 and len(rows) == 16

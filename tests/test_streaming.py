@@ -45,6 +45,28 @@ def test_register_totals_accumulate_across_triggers(spark, tmp_path):
     assert t2 == {"PC": 3, "APP": 1, "Other": 1}
 
 
+def test_register_totals_restart_keeps_checkpoint_partitions(spark, tmp_path):
+    """A checkpoint keeps the shuffle-partition count it was created
+    with: restarting under a different spark.sql.shuffle.partitions
+    reads the same state stores, so existing checkpoints survive a
+    change of the default."""
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    created = spark.conf.get("spark.sql.shuffle.partitions")
+    assert created != "3"
+    _write_lines(src, "b1.txt", REG_LINES_1)
+    _run(jobs.register_totals_job, spark, src, out, ckpt)
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        _write_lines(src, "b2.txt", REG_LINES_2)
+        _run(jobs.register_totals_job, spark, src, out, ckpt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", created)
+    totals = {r["platform"]: r["total"] for r in spark.read.parquet(out).collect()}
+    assert totals == {"PC": 3, "APP": 1, "Other": 1}
+    state = os.path.join(ckpt, "state", "0")
+    assert len([d for d in os.listdir(state) if d.isdigit()]) == int(created)
+
+
 def test_register_totals_state_job(spark, tmp_path):
     """applyInPandasWithState variant accumulates across triggers exactly
     like the declarative update-mode aggregation (A2/T3)."""

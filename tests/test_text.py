@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from edu_online_spark.functions import text as T
@@ -83,32 +85,41 @@ def test_spread_small_scan_passthrough_above_threshold(spark, tmp_path):
     """VERDICT r16 #9: the spread must be a structural NO-OP whenever
     the file input exceeds one split — at real scale input splits
     supply the parallelism and an added Exchange would be a regression.
-    Simulated by dropping the threshold below the file's size."""
+    Simulated by dropping the threshold below the file's size. The
+    decision follows the file's CURRENT size: a file rewritten larger
+    in place (same path) flips it to pass-through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from edu_online_spark.functions.text import (
         SPREAD_MAX_INPUT_BYTES_CONF,
-        _SPREAD_SIZE_CACHE,
         spread_small_scan,
     )
 
     p = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(
-        [(i, "text " * 50) for i in range(500)], ["doc_id", "text"]
-    ).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    _SPREAD_SIZE_CACHE.clear()
-    spark.conf.set(SPREAD_MAX_INPUT_BYTES_CONF, "1")
+
+    def write_docs(n: int) -> int:
+        pq.write_table(
+            pa.table({"doc_id": list(range(n)), "text": ["text " * 50] * n}), p
+        )
+        return os.path.getsize(p)
+
+    def spreads() -> bool:
+        out = spread_small_scan(spark.read.parquet(p), "doc_id")
+        return "RepartitionByExpression" in out._jdf.queryExecution().logical().toString()
+
+    small = write_docs(500)
     try:
-        out = spread_small_scan(df, "doc_id")
-        # pass-through: no repartition node added to the plan
-        assert "RepartitionByExpression" not in out._jdf.queryExecution().logical().toString()
-        # and the probe result was memoized for the next operator in
-        # the same query path
-        assert len(_SPREAD_SIZE_CACHE) == 1
         # small input (default threshold): the spread fires
-        spark.conf.unset(SPREAD_MAX_INPUT_BYTES_CONF)
-        out2 = spread_small_scan(df, "doc_id")
-        assert "RepartitionByExpression" in out2._jdf.queryExecution().logical().toString()
-        assert len(_SPREAD_SIZE_CACHE) == 1  # same file set, cache hit
+        assert spreads()
+        # input above the threshold: pass-through, no repartition node
+        spark.conf.set(SPREAD_MAX_INPUT_BYTES_CONF, "1")
+        assert not spreads()
+        # same path, rewritten larger in place: the decision flips
+        spark.conf.set(SPREAD_MAX_INPUT_BYTES_CONF, str(small + 1))
+        assert spreads()
+        assert write_docs(5000) > small + 1
+        assert not spreads()
     finally:
         try:
             spark.conf.unset(SPREAD_MAX_INPUT_BYTES_CONF)
