@@ -2005,7 +2005,16 @@ def fulfillment_latency(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
             F.datediff("l_shipdate", "o_orderdate").cast("long").alias("days"),
         )
     )
-    hist = base.groupBy("priority", "days").agg(F.count(F.lit(1)).alias("cnt"))
+    return fulfillment_latency_report(
+        base.groupBy("priority", "days").agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def fulfillment_latency_report(hist: DataFrame) -> DataFrame:
+    """The histogram→quantiles stage of `fulfillment_latency`, shared
+    with its streaming twin (jobs.latency_quantiles_job), which folds
+    the same histogram across triggers. Input contract: one row per
+    (priority, days) with its count `cnt`."""
     h = hist.withColumn(
         "cum", F.sum("cnt").over(Window.partitionBy("priority").orderBy("days"))
     ).withColumn("n", F.sum("cnt").over(Window.partitionBy("priority")))
@@ -2106,10 +2115,18 @@ def supplier_revenue_gini(
         rev.l_suppkey == F.col("s_suppkey"),
     ).join(F.broadcast(nation.select("n_nationkey", "n_name")),
            F.col("s_nationkey") == F.col("n_nationkey"))
+    return revenue_gini_report(
+        per.select(F.col("n_name").alias("nation"), "s_suppkey", "revenue")
+    )
+
+
+def revenue_gini_report(per_supplier: DataFrame) -> DataFrame:
+    """The rank→Gini stage of `supplier_revenue_gini`, shared with its
+    streaming twin (jobs.revenue_gini_job), which folds the same
+    per-supplier revenue across triggers. Input contract: one row per
+    (nation, s_suppkey) with its exact decimal `revenue`."""
     w = Window.partitionBy("nation").orderBy("revenue", "s_suppkey")
-    ranked = per.select(
-        F.col("n_name").alias("nation"), "s_suppkey", "revenue"
-    ).withColumn("i", F.row_number().over(w))
+    ranked = per_supplier.withColumn("i", F.row_number().over(w))
     return (
         ranked.groupBy("nation")
         .agg(
@@ -2151,9 +2168,18 @@ def customer_balance_deciles(customer: DataFrame) -> DataFrame:
     integer form the certified quantile ops use.
 
     Queued for round 14 (`customer_balance_deciles`, ORACLE_R14)."""
-    hist = customer.groupBy("c_mktsegment", "c_acctbal").agg(
-        F.count(F.lit(1)).alias("cnt")
+    return balance_deciles_report(
+        customer.groupBy("c_mktsegment", "c_acctbal").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
     )
+
+
+def balance_deciles_report(hist: DataFrame) -> DataFrame:
+    """The histogram→deciles stage of `customer_balance_deciles`,
+    shared with its streaming twin (jobs.balance_deciles_job), which
+    folds the same histogram across triggers. Input contract: one row
+    per (c_mktsegment, c_acctbal) with its count `cnt`."""
     h = hist.withColumn(
         "cum",
         F.sum("cnt").over(

@@ -19,9 +19,41 @@ Every job takes (source DataFrame, sink/path, checkpoint) and returns
 the started StreamingQuery, so tests drive them with file sources and
 `availableNow` triggers while production wires Kafka + real storage.
 Source adapters for Kafka live in streaming/sources.py.
+
+The stateful "fold" jobs (QzPointStreaming.scala's merge with MySQL
+history, generalized) keep their cumulative state in a parquet table
+beside their output rather than in the state store, and all of them
+run one skeleton, `_fold_job`, which owns the exactly-once rule. Per
+trigger, in this order:
+
+  fence     an empty batch returns; half-commit recovery runs on the
+            state path; the state is read with its known schema (or
+            starts empty), and a trigger whose id is not newer than the
+            state's `last_batch_id` is a redelivery and returns — the
+            fold already happened;
+  fold      `fold(batch, prior, batch_id)` returns the new state and an
+            optional snapshot; the state is materialized once;
+  snapshot  the snapshot is written to `out/ingest_batch=N` (an
+            overwrite, so a replay rewrites the same bytes);
+  swap      the state, stamped with `last_batch_id = N`, replaces the
+            old one through sinks.parquet_overwrite_atomic — this is
+            the commit point of the trigger;
+  prune     only the newest `retain_snapshots` snapshot dirs are kept.
+
+Pruning comes last because it is the only step that deletes published
+data. After the swap it only removes snapshots older than a committed
+one (each dir is a complete answer), and a crash anywhere before it
+leaves extra dirs, never a gap: a trigger that fails before its swap
+has deleted nothing, and its replay rewrites the same `ingest_batch=N`
+dir. The id fence is scoped to the checkpoint: a fresh
+checkpoint against an existing state restarts batch ids at 0, which the
+fence treats as redelivery — reprocess into a fresh sink instead.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,8 +70,120 @@ from ..sources.logs import (
 from . import sinks
 
 
-def _trigger(kw: dict, available_now: bool) -> dict:
+def _trigger(available_now: bool) -> dict:
     return {"availableNow": True} if available_now else {"processingTime": "3 seconds"}
+
+
+def _start(
+    df: DataFrame, body, checkpoint: str, available_now: bool, mode: str = "append"
+) -> StreamingQuery:
+    """Start `df` as a foreachBatch query running `body(batch, batch_id)`
+    per trigger, every 3 s (the reference's batch interval) or once over
+    the available input."""
+    return (
+        df.writeStream.outputMode(mode)
+        .foreachBatch(body)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**_trigger(available_now))
+        .start()
+    )
+
+
+def _decode_json(raw: DataFrame, ddl: str, required, select) -> DataFrame:
+    """Parse the `value` column as JSON with the DDL schema `ddl`. Corrupt
+    lines and lines where a `required` field is null are dropped — one
+    poison record must not halt a stream. `required` and `select` items
+    are field names or Column expressions over the parsed struct `j`; a
+    name in `select` keeps that field under its own name."""
+    parsed = F.from_json(
+        F.col("value"),
+        f"{ddl}, _corrupt string",
+        {"columnNameOfCorruptRecord": "_corrupt"},
+    )
+    keep = F.col("j._corrupt").isNull()
+    for r in required:
+        keep = keep & (F.col(f"j.{r}") if isinstance(r, str) else r).isNotNull()
+    return (
+        raw.select(parsed.alias("j"))
+        .filter(keep)
+        .select(
+            *[F.col(f"j.{c}").alias(c) if isinstance(c, str) else c for c in select]
+        )
+    )
+
+
+def _add(prior: DataFrame, delta: DataFrame, keys, value: str, dtype: str = "long"):
+    """The additive fold: prior ∪ delta, summed per key."""
+    summed = F.sum(value).cast(dtype).alias(value)
+    return prior.unionByName(delta).groupBy(*keys).agg(summed)
+
+
+def _fold_job(
+    stream: DataFrame,
+    checkpoint: str,
+    state_path: str,
+    state_ddl: str,
+    fold,
+    out: str | None = None,
+    retain_snapshots: int = 0,
+    available_now: bool = False,
+    publish=None,
+) -> StreamingQuery:
+    """Run a stateful fold job on `stream` (contract in the module
+    docstring). `state_ddl` is the state's schema without the
+    `last_batch_id` fence column the skeleton adds.
+
+    `fold(batch, prior, batch_id)` returns `(state, snapshot)`. The
+    snapshot is None, a DataFrame written as is (trigger-sized output,
+    e.g. the documents admitted this trigger), or a function of the
+    materialized state returning a report, written as one file.
+    `publish(state, batch_id)`, if given, writes a view derived from the
+    state alone (e.g. a report overwritten in place); it also runs on a
+    redelivered trigger, from the committed state, so a view lost to a
+    crash after the swap comes back on replay."""
+
+    def step(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        spark = batch.sparkSession
+        sinks.recover_sink(state_path)
+        if os.path.exists(state_path):
+            schema = f"{state_ddl}, last_batch_id long"
+            old = spark.read.schema(schema).parquet(state_path)
+            prior = old.drop("last_batch_id")
+            last = old.agg(F.max("last_batch_id")).first()[0]
+            if last is not None and last >= batch_id:
+                if publish is not None:
+                    publish(prior, batch_id)
+                return  # redelivered trigger: already folded in
+        else:
+            prior = spark.createDataFrame([], state_ddl)
+        state, snapshot = fold(batch, prior, batch_id)
+        state = state.localCheckpoint(eager=True)  # snapshot + swap share it
+        if callable(snapshot):
+            snapshot = snapshot(state).coalesce(1)
+        if snapshot is not None:
+            snapshot.write.mode("overwrite").parquet(
+                os.path.join(out, f"ingest_batch={batch_id}")
+            )
+        if publish is not None:
+            publish(state, batch_id)
+        sinks.parquet_overwrite_atomic(state_path)(
+            state.withColumn("last_batch_id", F.lit(batch_id).cast("long")).coalesce(1),
+            batch_id,
+        )
+        if retain_snapshots > 0:
+            kept = sorted(
+                int(d.split("=")[1])
+                for d in os.listdir(out)
+                if d.startswith("ingest_batch=")
+            )
+            for b in kept[:-retain_snapshots]:
+                shutil.rmtree(
+                    os.path.join(out, f"ingest_batch={b}"), ignore_errors=True
+                )
+
+    return _start(stream, sinks.pin_batch(step), checkpoint, available_now)
 
 
 def register_windowed_job(
@@ -63,12 +207,12 @@ def register_windowed_job(
         .agg(F.count("*").alias("cnt"))
         .select(F.col("window.start").alias("window_start"), "platform", "cnt")
     )
-    return (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(sinks.parquet_upsert(out_path, ["window_start", "platform"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        counts,
+        sinks.parquet_upsert(out_path, ["window_start", "platform"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -91,12 +235,12 @@ def register_totals_job(
     """
     reg = decode_register_log(raw)
     totals = reg.groupBy("platform").agg(F.count("*").alias("total"))
-    return (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(sink or sinks.parquet_upsert(out_path, ["platform"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        totals,
+        sink or sinks.parquet_upsert(out_path, ["platform"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -128,12 +272,12 @@ def register_totals_state_job(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(sinks.parquet_upsert(out_path, ["platform"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        totals,
+        sinks.parquet_upsert(out_path, ["platform"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -182,14 +326,12 @@ def quiz_mastery_job(
             "updatetime", F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
         )
     )
-    return (
-        mastered.writeStream.outputMode("update")
-        .foreachBatch(
-            sink or sinks.parquet_upsert(out_path, ["uid", "courseid", "pointid"])
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        mastered,
+        sink or sinks.parquet_upsert(out_path, ["uid", "courseid", "pointid"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -217,13 +359,7 @@ def user_session_job(
             "n_events",
         )
     )
-    return (
-        sessions.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(sessions, sinks.parquet_append(out_path), checkpoint, available_now)
 
 
 def page_flow_job(
@@ -244,13 +380,7 @@ def page_flow_job(
         )
         sinks.parquet_append(out_path)(flows, batch_id)
 
-    return (
-        pages.writeStream.outputMode("append")
-        .foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(pages, per_batch, checkpoint, available_now)
 
 
 def user_idle_timeout_job(
@@ -305,12 +435,8 @@ def user_idle_timeout_job(
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-    return (
-        tracked.writeStream.outputMode("update")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        tracked, sinks.parquet_append(out_path), checkpoint, available_now, "update"
     )
 
 
@@ -347,7 +473,7 @@ def console_debug_job(
         .option("numRows", str(num_rows))
         .option("truncate", str(truncate).lower())
         .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
+        .trigger(**_trigger(available_now))
         .start()
     )
 
@@ -376,13 +502,11 @@ def register_region_enrich_job(
         "r_regionkey", F.pmod(F.xxhash64("user_id"), F.lit(5)).cast("int")
     )
     enriched = keyed.join(F.broadcast(region.select("r_regionkey", "r_name")), "r_regionkey")
-    return (
-        enriched.select("user_id", "platform", "create_time", "r_name")
-        .writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        enriched.select("user_id", "platform", "create_time", "r_name"),
+        sinks.parquet_append(out_path),
+        checkpoint,
+        available_now,
     )
 
 
@@ -406,13 +530,11 @@ def register_dedup_job(
     deduped = reg.withWatermark("event_ts", watermark).dropDuplicatesWithinWatermark(
         ["user_id", "create_time"]
     )
-    return (
-        deduped.select("user_id", "platform", "create_time")
-        .writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        deduped.select("user_id", "platform", "create_time"),
+        sinks.parquet_append(out_path),
+        checkpoint,
+        available_now,
     )
 
 
@@ -479,12 +601,8 @@ def page_transition_join_job(
             ),
         )
     )
-    return (
-        transitions.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        transitions, sinks.parquet_append(out_path), checkpoint, available_now
     )
 
 
@@ -515,12 +633,8 @@ def page_toppages_job(
             return
         publish(batch.orderBy(F.desc("visits"), F.asc("page_id")).limit(k), batch_id)
 
-    return (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(sinks.pin_batch(overwrite))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        counts, sinks.pin_batch(overwrite), checkpoint, available_now, "complete"
     )
 
 
@@ -557,7 +671,7 @@ def rawlog_archive_job(
         .option("compression", "snappy")
         .partitionBy(*partitions)
         .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
+        .trigger(**_trigger(available_now))
         .start()
     )
 
@@ -590,34 +704,22 @@ def document_ingest_job(
       archive  append-only snappy parquet partitioned by (lang, day) —
                the layout a downstream tokenizer job prunes by.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..functions import text as T
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
+    event_ts = F.try_to_timestamp(F.col("j.ts"))
     docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull())
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.coalesce(F.col("j.lang"), F.lit("und")).alias("lang"),
-            F.coalesce(F.col("j.source"), F.lit("unknown")).alias("source"),
-            F.try_to_timestamp(F.col("j.ts")).alias("event_ts"),
+        _decode_json(
+            raw,
+            "doc_id string, text string, lang string, source string, ts string",
+            ("text", event_ts),
+            (
+                "doc_id",
+                "text",
+                F.coalesce(F.col("j.lang"), F.lit("und")).alias("lang"),
+                F.coalesce(F.col("j.source"), F.lit("unknown")).alias("source"),
+                event_ts.alias("event_ts"),
+            ),
         )
-        .filter(F.col("event_ts").isNotNull() & F.col("text").isNotNull())
         .filter(T.token_count("text") >= min_tokens)
         .withColumn("fingerprint", T.fingerprint_fast("text"))
     )
@@ -627,12 +729,11 @@ def document_ingest_job(
     archived = deduped.select(
         "doc_id", "text", "lang", "source", "event_ts", day_bucket("event_ts").alias("day")
     )
-    return (
-        archived.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path, ["lang", "day"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        archived,
+        sinks.parquet_append(out_path, ["lang", "day"]),
+        checkpoint,
+        available_now,
     )
 
 
@@ -654,48 +755,29 @@ def pii_scrub_job(
     No watermark, no state store — this job backpressures only on
     sink throughput, so it scales to the full firehose.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.pii import PII_PATTERNS
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
     redacted = F.col("j.text")
     n_hits = F.lit(0)
     for _, pat, token in PII_PATTERNS:
         n_hits = n_hits + F.regexp_count(F.col("j.text"), F.lit(pat))
         redacted = F.regexp_replace(redacted, pat, token)
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull())
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
+    event_ts = F.try_to_timestamp(F.col("j.ts"))
+    docs = _decode_json(
+        raw,
+        "doc_id string, text string, lang string, source string, ts string",
+        ("text", event_ts),
+        (
+            "doc_id",
             redacted.alias("text"),
             n_hits.alias("n_redactions"),
             F.coalesce(F.col("j.lang"), F.lit("und")).alias("lang"),
             F.coalesce(F.col("j.source"), F.lit("unknown")).alias("source"),
-            F.try_to_timestamp(F.col("j.ts")).alias("event_ts"),
-        )
-        .filter(F.col("event_ts").isNotNull() & F.col("text").isNotNull())
-        .withColumn("day", day_bucket("event_ts"))
-    )
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path, ["lang", "day"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+            event_ts.alias("event_ts"),
+        ),
+    ).withColumn("day", day_bucket("event_ts"))
+    return _start(
+        docs, sinks.parquet_append(out_path, ["lang", "day"]), checkpoint, available_now
     )
 
 
@@ -728,30 +810,17 @@ def user_status_scd2_job(
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("user_id", StringType()),
-            StructField("event_type", StringType()),
-            StructField("ts", StringType()),
-            StructField("event_id", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    events = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull())
-        .select(
-            F.col("j.user_id").alias("user_id"),
-            F.col("j.event_type").alias("event_type"),
-            F.try_to_timestamp(F.col("j.ts")).alias("event_ts"),
+    event_ts = F.try_to_timestamp(F.col("j.ts"))
+    events = _decode_json(
+        raw,
+        "user_id string, event_type string, ts string, event_id string",
+        ("user_id", event_ts),
+        (
+            "user_id",
+            "event_type",
+            event_ts.alias("event_ts"),
             F.coalesce(F.col("j.event_id"), F.lit("")).alias("event_id"),
-        )
-        .filter(F.col("event_ts").isNotNull() & F.col("user_id").isNotNull())
+        ),
     )
 
     def track(key, pdfs, state: GroupState):
@@ -798,13 +867,7 @@ def user_status_scd2_job(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        closed.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(closed, sinks.parquet_append(out_path), checkpoint, available_now)
 
 
 def mixture_monitor_job(
@@ -824,39 +887,27 @@ def mixture_monitor_job(
     them into the sink. Decode quarantines corrupt JSON, same posture
     as every ingest job.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..functions import text as T
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull() & F.col("j.text").isNotNull())
-        .select(
+    docs = _decode_json(
+        raw,
+        "doc_id string, text string, source string",
+        ("text",),
+        (
             F.coalesce(F.col("j.source"), F.lit("unknown")).alias("source"),
             T.token_count(F.col("j.text")).alias("n_tokens"),
-        )
+        ),
     )
     inv = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
     )
-    return (
-        inv.writeStream.outputMode("update")
-        .foreachBatch(sinks.parquet_upsert(out_path, ["source"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        inv,
+        sinks.parquet_upsert(out_path, ["source"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -880,12 +931,12 @@ def vocabulary_stream_job(
         F.explode(T.tokens(F.col("value"))).alias("token")
     ).filter(F.col("token") != "")
     counts = toks.groupBy("token").agg(F.count("*").alias("cnt"))
-    return (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(sinks.parquet_upsert(out_path, ["token"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        counts,
+        sinks.parquet_upsert(out_path, ["token"]),
+        checkpoint,
+        available_now,
+        "update",
     )
 
 
@@ -935,13 +986,7 @@ def page_abandonment_job(
         "to_page",
         F.col("to_page").isNull().alias("abandoned"),
     )
-    return (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(joined, sinks.parquet_append(out_path), checkpoint, available_now)
 
 
 def distinct_users_sketch_job(
@@ -971,8 +1016,6 @@ def distinct_users_sketch_job(
     Output table: platform, sk (binary, reusable for further rollups
     e.g. all-platform union), distinct_users (estimate).
     """
-    import os
-
     reg = decode_register_log(raw)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
@@ -1002,13 +1045,7 @@ def distinct_users_sketch_job(
         )
         sinks.parquet_overwrite_atomic(out_path)(merged, batch_id)
 
-    return (
-        reg.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(merge))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(reg, sinks.pin_batch(merge), checkpoint, available_now)
 
 
 def embedding_ingest_job(
@@ -1060,12 +1097,11 @@ def embedding_ingest_job(
     assigned = decoded.withColumn(
         "cell", _nearest_cids_udf(cents, 1)(F.col("embedding"))[0]
     )
-    return (
-        assigned.writeStream.outputMode("append")
-        .foreachBatch(sinks.parquet_append(out_path, partition_by=["cell"]))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _start(
+        assigned,
+        sinks.parquet_append(out_path, partition_by=["cell"]),
+        checkpoint,
+        available_now,
     )
 
 
@@ -1094,71 +1130,31 @@ def token_countmin_job(
     batch ids at 0, which this guard treats as redelivery — reprocess
     into a fresh sink instead.
     """
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..functions import text as T
     from ..operators.sketches import countmin_cells
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull() & F.col("j.text").isNotNull())
-        .select(F.col("j.text").alias("text"))
+    docs = _decode_json(
+        raw, "doc_id string, text string, source string", ("text",), ("text",)
     )
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def merge(batch: DataFrame, prior: DataFrame, batch_id: int):
         token_counts = (
             batch.select(F.explode(T.tokens("text")).alias("token"))
             .filter(F.col("token") != "")
             .groupBy("token")
             .agg(F.count("*").alias("cnt"))
         )
+        # d×w cells at most: the skeleton's single-file state IS the sink
         delta = countmin_cells(token_counts)
-        # promote any half-committed swap BEFORE the existence check —
-        # otherwise a crash between the two publish renames reads as a
-        # fresh sink and the accumulated grid + replay watermark vanish
-        sinks.recover_sink(out_path)
-        if os.path.exists(out_path):
-            old = spark.read.parquet(out_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: already folded in
-            delta = (
-                old.select("row", "bucket", "cell_cnt")
-                .unionByName(delta)
-                .groupBy("row", "bucket")
-                .agg(F.sum("cell_cnt").alias("cell_cnt"))
-            )
-        merged = (
-            delta.withColumn("last_batch_id", F.lit(batch_id))
-            # d×w cells at most: single file, atomic swap, cheap read-back
-            .coalesce(1)
-            # materialize BEFORE the swap below retires the old out_path
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(out_path)(merged, batch_id)
+        return _add(prior, delta, ["row", "bucket"], "cell_cnt"), None
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(merge))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_path,
+        "row int, bucket long, cell_cnt long",
+        merge,
+        available_now=available_now,
     )
 
 
@@ -1183,75 +1179,36 @@ def length_drift_monitor_job(
     (addition is not replay-idempotent). The histogram lives beside the
     report (out_path + '.hist') so the report overwrite stays atomic.
     """
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from ..functions import text as T
     from ..operators.textops import (
         drift_between_histograms,
         token_length_histogram,
     )
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
+    docs = _decode_json(
+        raw, "doc_id string, text string, source string", ("text",), ("text",)
     )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull() & F.col("j.text").isNotNull())
-        .select(F.col("j.text").alias("text"))
-    )
-    hist_path = out_path + ".hist"
     ref = reference_hist.select(
         "bin", F.col("n_old").alias("n_old")
     ).localCheckpoint(eager=True)
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def merge(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = token_length_histogram(batch, cnt_name="n")
-        sinks.recover_sink(hist_path)
-        if os.path.exists(hist_path):
-            old = spark.read.parquet(hist_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: already folded in
-            delta = (
-                old.select("bin", "n")
-                .unionByName(delta)
-                .groupBy("bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        cum = (
-            delta.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(hist_path)(cum, batch_id)
-        report = (
-            drift_between_histograms(
-                ref, cum.select("bin", F.col("n").alias("n_new"))
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(out_path)(report, batch_id)
+        return _add(prior, delta, ["bin"], "n"), None
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(merge))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    def publish(hist: DataFrame, batch_id: int) -> None:
+        report = drift_between_histograms(
+            ref, hist.select("bin", F.col("n").alias("n_new"))
+        )
+        sinks.parquet_overwrite_atomic(out_path)(report.coalesce(1), batch_id)
+
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_path + ".hist",
+        "bin long, n long",
+        merge,
+        available_now=available_now,
+        publish=publish,
     )
 
 
@@ -1280,21 +1237,13 @@ def record_linkage_job(
     duplicates. canonical carries (cand_key, c_nation, c_rec) as
     produced by the batch operator's clean-side projection.
     """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..operators.analytics import link_records
 
-    schema = StructType(
-        [
-            StructField("rec_id", LongType()),
-            StructField("name", StringType()),
-            StructField("nation", LongType()),
-            StructField("cents", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
+    # corrupt lines are kept here (not _decode_json) — they quarantine
     parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
+        F.col("value"),
+        "rec_id long, name string, nation long, cents string, _corrupt string",
+        {"columnNameOfCorruptRecord": "_corrupt"},
     )
     decoded = raw.select(parsed.alias("j")).select(
         F.col("j._corrupt").alias("_corrupt"),
@@ -1344,13 +1293,7 @@ def record_linkage_job(
         matches = link_records(good, canonical, id_col="rec_id")
         upsert(matches, batch_id)
 
-    return (
-        decoded.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(link))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(decoded, sinks.pin_batch(link), checkpoint, available_now)
 
 
 def substring_scrub_job(
@@ -1389,35 +1332,17 @@ def substring_scrub_job(
     Input: JSON {doc_id, text, source}; malformed lines drop on
     decode. Output rows: (doc_id, n_tokens, n_removed, text_deduped).
     """
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..operators.dedup import (
         SUBSTR_SPAN_TOKENS,
         _mask_spans,
         _span_rows,
     )
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-        )
-        .select(F.col("j.doc_id").alias("doc_id"), F.col("j.text").alias("text"))
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text"),
+        ("doc_id", "text"),
     )
     upsert_docs = sinks.parquet_upsert(out_path, ["doc_id"])
     upsert_spans = sinks.parquet_upsert(span_table, ["span"])
@@ -1456,13 +1381,7 @@ def substring_scrub_job(
             new_spans.withColumn("ingest_batch", F.lit(batch_id)), batch_id
         )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(scrub))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(docs, sinks.pin_batch(scrub), checkpoint, available_now)
 
 
 def token_budget_gate_job(
@@ -1500,63 +1419,23 @@ def token_budget_gate_job(
     oversized early doc permanently starve its source, which is the
     wrong failure mode for an ingest quota.
     """
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from ..functions import text as T
     from ..functions.core import hash_bucket
     from ..operators.textops import BUDGET_HASH_MOD, TOKEN_BUDGET_PER_SOURCE
 
     budget = TOKEN_BUDGET_PER_SOURCE if budget is None else budget
-    state_path = out_docs + ".state"
-
-    schema = StructType(
-        [
-            # LongType to match documents.doc_id — the priority hash is
-            # arithmetic (hash_bucket), same expression as the batch op
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-            & F.col("j.source").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
+    # doc_id is LongType to match documents.doc_id — the priority hash
+    # is arithmetic (hash_bucket), same expression as the batch op
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text", "source"),
+        ("doc_id", "text", "source"),
     )
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        # promote any half-committed state swap BEFORE the existence
-        # check (the recover-before-read invariant test_sinks pins)
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: already admitted + counted
-            prior = old.select("source", "used_tokens")
-        else:
-            prior = spark.createDataFrame(
-                [], "source string, used_tokens long"
-            )
+    def gate(batch: DataFrame, prior: DataFrame, batch_id: int):
         # deterministic within-trigger priority (trigger-sized window)
         w = (
             Window.partitionBy("source")
@@ -1579,31 +1458,19 @@ def token_budget_gate_job(
             .select("doc_id", "source", "n_tokens", "cum_tokens", "text")
             .localCheckpoint(eager=True)  # docs write + state branch
         )
-        # idempotent by construction: same state + same batch → same dir
-        admitted.write.mode("overwrite").parquet(
-            os.path.join(out_docs, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            prior.unionByName(
-                admitted.groupBy("source").agg(
-                    F.sum("n_tokens").alias("used_tokens")
-                )
-            )
-            .groupBy("source")
-            .agg(F.sum("used_tokens").alias("used_tokens"))
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            # materialize BEFORE the staged swap retires the old state
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
+        used = admitted.groupBy("source").agg(F.sum("n_tokens").alias("used_tokens"))
+        # the docs dir is idempotent by construction: same state + same
+        # batch → same admitted set
+        return _add(prior, used, ["source"], "used_tokens"), admitted
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(gate))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_docs + ".state",
+        "source string, used_tokens long",
+        gate,
+        out=out_docs,
+        available_now=available_now,
     )
 
 
@@ -1633,52 +1500,18 @@ def shard_assign_job(
     each trigger's layout at arrival — a later doc never reorders an
     already-written shard.
     """
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..operators.textops import SHARD_TOKEN_TARGET, assign_training_shards
 
     shard_tokens = SHARD_TOKEN_TARGET if shard_tokens is None else shard_tokens
-    state_path = out_docs + ".state"
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-            & F.col("j.source").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text", "source"),
+        ("doc_id", "text", "source"),
     )
 
-    def assign(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)  # promote half-committed swap first
-        prior_total = 0
-        if os.path.exists(state_path):
-            st = spark.read.parquet(state_path).first()
-            if st["last_batch_id"] >= batch_id:
-                return  # redelivered trigger: layout already written
-            prior_total = st["total_tokens"]
+    def assign(batch: DataFrame, prior: DataFrame, batch_id: int):
+        prior_total = prior.agg(F.max("total_tokens")).first()[0] or 0
         assigned = (
             assign_training_shards(batch, shard_tokens)
             .withColumn("cum_tokens", F.col("cum_tokens") + F.lit(prior_total))
@@ -1688,22 +1521,17 @@ def shard_assign_job(
             )
             .localCheckpoint(eager=True)  # docs write + state branch
         )
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(out_docs, f"ingest_batch={batch_id}")
-        )
-        new_total = assigned.agg(F.max("cum_tokens")).first()[0]
-        new_state = spark.createDataFrame(
-            [(int(new_total), int(batch_id))],
-            "total_tokens long, last_batch_id long",
-        ).coalesce(1)
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
+        total = assigned.agg(F.max("cum_tokens").cast("long").alias("total_tokens"))
+        return total, assigned
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(assign))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_docs + ".state",
+        "total_tokens long",
+        assign,
+        out=out_docs,
+        available_now=available_now,
     )
 
 
@@ -1729,82 +1557,43 @@ def length_quantile_sketch_job(
     fenced by last_batch_id exactly as the CMS job fences its cells
     (the reference's replay-doubling lesson, MyKafkaUtil.scala:32-92).
     """
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
+    docs = _decode_json(
+        raw, "doc_id string, text string, source string", ("text",), ("text",)
     )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull() & F.col("j.text").isNotNull())
-        .select(F.col("j.text").alias("text"))
-    )
-    sk_path = out_path + ".sk"
 
-    def publish(state: DataFrame, batch_id: int) -> None:
-        report = state.select(
-            "n_docs",
-            F.kll_sketch_get_quantile_double("sk", F.lit(0.25)).alias("p25"),
-            F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("p50"),
-            F.kll_sketch_get_quantile_double("sk", F.lit(0.95)).alias("p95"),
-        ).coalesce(1).localCheckpoint(eager=True)
-        sinks.parquet_overwrite_atomic(out_path)(report, batch_id)
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def fold(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.select(
             F.size(F.split(F.trim("text"), " +")).cast("double").alias("n")
         ).agg(
             F.kll_sketch_agg_double("n").alias("sk"),
             F.count("*").alias("n_docs"),
         )
-        sinks.recover_sink(sk_path)  # promote half-commit BEFORE reading
-        if os.path.exists(sk_path):
-            old = spark.read.parquet(sk_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                # Redelivered trigger: the sketch is already folded in,
-                # but the crash window between the state swap and the
-                # report publish means the published report may still be
-                # one batch behind — re-derive it from the COMMITTED
-                # state instead of returning early, or an idle stream
-                # would serve the stale report indefinitely (ADVICE r6).
-                publish(old, batch_id)
-                return
-            delta = (
-                old.select("sk", "n_docs")
-                .unionByName(delta)
-                .agg(
-                    F.kll_merge_agg_double("sk").alias("sk"),
-                    F.sum("n_docs").alias("n_docs"),
-                )
-            )
-        cum = (
-            delta.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # pin before the swap retires old
+        merged = prior.unionByName(delta).agg(
+            F.kll_merge_agg_double("sk").alias("sk"),
+            F.sum("n_docs").alias("n_docs"),
         )
-        sinks.parquet_overwrite_atomic(sk_path)(cum, batch_id)
-        publish(cum, batch_id)
+        return merged, None
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(fold))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    # runs on redelivered triggers too (ADVICE r6): a report lost after
+    # the state swap is re-derived from the COMMITTED sketch, or an idle
+    # stream would serve the stale report indefinitely
+    def publish(state: DataFrame, batch_id: int) -> None:
+        report = state.select(
+            "n_docs",
+            F.kll_sketch_get_quantile_double("sk", F.lit(0.25)).alias("p25"),
+            F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("p50"),
+            F.kll_sketch_get_quantile_double("sk", F.lit(0.95)).alias("p95"),
+        ).coalesce(1)
+        sinks.parquet_overwrite_atomic(out_path)(report, batch_id)
+
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_path + ".sk",
+        "sk binary, n_docs long",
+        fold,
+        available_now=available_now,
+        publish=publish,
     )
 
 
@@ -1836,66 +1625,30 @@ def seen_filter_job(
     union (idempotent), but the ANNOTATION depends on prior state, so
     replays are still fenced by last_batch_id for exact re-emission.
     """
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    from ..functions.core import hash_bucket
     from ..operators.sketches import BLOOM_M, BLOOM_MULTS
+    from ..operators.textops import BUDGET_HASH_MOD
 
     m = BLOOM_M if m is None else m
-    state_path = out_docs + ".bits"
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text"),
+        ("doc_id", "text", "source"),
+    )
+    # the BLOOM_MULTS bit positions of the content key `k`
+    bit_cols = [
+        F.pmod(F.pmod("k", F.lit(2147483647)) * F.lit(a), F.lit(m)) for a in BLOOM_MULTS
+    ]
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
-    )
-
-    def probe_and_insert(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)  # promote half-commit BEFORE read
-        if os.path.exists(state_path):
-            bits = spark.read.parquet(state_path)
-            last = bits.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: already annotated + inserted
-            prior = bits.select("bit")
-        else:
-            prior = spark.createDataFrame([], "bit long")
+    def probe_and_insert(batch: DataFrame, prior: DataFrame, batch_id: int):
         key = F.xxhash64(F.trim("text"))
         keyed = batch.select("doc_id", "text", "source", key.alias("k"))
-        probe = keyed.select(
-            "doc_id",
-            *[
-                F.pmod(F.pmod("k", F.lit(2147483647)) * F.lit(a), F.lit(m)).alias(
-                    f"_b{i}"
-                )
-                for i, a in enumerate(BLOOM_MULTS)
-            ],
+        hit = keyed.select(
+            "doc_id", *[b.alias(f"_b{i}") for i, b in enumerate(bit_cols)]
         )
-        hit = probe
         for i in range(len(BLOOM_MULTS)):
             hit = hit.join(
                 F.broadcast(
@@ -1912,9 +1665,6 @@ def seen_filter_job(
         # exact within-trigger duplicate detection (trigger-sized);
         # first occurrence = hash-priority order (the budget-gate
         # convention), doc_id as the final tiebreak
-        from ..functions.core import hash_bucket
-        from ..operators.textops import BUDGET_HASH_MOD
-
         w = Window.partitionBy("k").orderBy(
             hash_bucket("doc_id", BUDGET_HASH_MOD), "doc_id"
         )
@@ -1929,36 +1679,18 @@ def seen_filter_job(
             )
             .localCheckpoint(eager=True)  # docs write + bits branch
         )
-        annotated.write.mode("overwrite").parquet(
-            os.path.join(out_docs, f"ingest_batch={batch_id}")
-        )
-        new_bits = keyed.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(
-                            F.pmod("k", F.lit(2147483647)) * F.lit(a), F.lit(m)
-                        )
-                        for a in BLOOM_MULTS
-                    ]
-                )
-            ).alias("bit")
-        )
-        merged = (
-            prior.unionByName(new_bits)
-            .distinct()  # bounded: at most m rows, ever
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(state_path)(merged, batch_id)
+        new_bits = keyed.select(F.explode(F.array(*bit_cols)).alias("bit"))
+        # bounded: at most m rows, ever
+        return prior.unionByName(new_bits).distinct(), annotated
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(probe_and_insert))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_docs + ".bits",
+        "bit long",
+        probe_and_insert,
+        out=out_docs,
+        available_now=available_now,
     )
 
 
@@ -2020,10 +1752,6 @@ def winnow_index_job(
     (license header) cannot push every subsequent document past
     min_shared.
     """
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..operators.textops import (
         WINNOW_MAX_FP_DF,
         WINNOW_MIN_SHARED,
@@ -2034,29 +1762,11 @@ def winnow_index_job(
     max_fp_df = WINNOW_MAX_FP_DF if max_fp_df is None else max_fp_df
     index_path = out_docs + ".fpindex"
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text"),
+        ("doc_id", "text", "source"),
     )
 
     def probe_and_index(batch: DataFrame, batch_id: int) -> None:
@@ -2164,13 +1874,7 @@ def winnow_index_job(
             os.path.join(index_path, f"ingest_batch={batch_id}")
         )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(probe_and_index))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(docs, sinks.pin_batch(probe_and_index), checkpoint, available_now)
 
 
 def curation_ingest_job(
@@ -2209,10 +1913,7 @@ def curation_ingest_job(
     docs, deterministic admission given (state, batch), batch-id fence
     on the state row.
     """
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from ..functions.core import hash_bucket
     from ..operators.textops import (
@@ -2225,51 +1926,16 @@ def curation_ingest_job(
 
     budget = TOKEN_BUDGET_PER_SOURCE if budget is None else budget
     shard_tokens = SHARD_TOKEN_TARGET if shard_tokens is None else shard_tokens
-    state_path = out_docs + ".state"
     rejects_path = out_docs + ".rejects"
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text", "source"),
+        ("doc_id", "text", "source"),
+    ).filter(F.col("source") != "")  # '' is the global-offset key
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-            & F.col("j.source").isNotNull()
-            & (F.col("j.source") != "")  # '' is the global-offset key
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
-    )
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def ingest(batch: DataFrame, prior: DataFrame, batch_id: int):
         spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: fully applied already
-            prior = old.select("source", "used_tokens")
-        else:
-            prior = spark.createDataFrame(
-                [], "source string, used_tokens long"
-            )
         prior = prior.localCheckpoint(eager=True)  # 3 readers below
         # --- stage 1: stateless quality gate (certified batch op) ----
         gated = gopher_quality_rules(
@@ -2370,38 +2036,24 @@ def curation_ingest_job(
             )
             .localCheckpoint(eager=True)
         )
-        sharded.write.mode("overwrite").parquet(
-            os.path.join(out_docs, f"ingest_batch={batch_id}")
-        )
         rule_rejects.unionByName(budget_rejects).write.mode(
             "overwrite"
         ).parquet(os.path.join(rejects_path, f"ingest_batch={batch_id}"))
-        # --- atomic combined state publish ---------------------------
-        new_totals = (
-            prior.unionByName(
-                admitted.groupBy("source").agg(
-                    F.sum("n_tokens").alias("used_tokens")
-                )
-            )
-            .unionByName(
-                admitted.agg(
-                    F.sum("n_tokens").alias("used_tokens")
-                ).select(F.lit("").alias("source"), "used_tokens")
-            )
-            .groupBy("source")
-            .agg(F.sum("used_tokens").alias("used_tokens"))
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
+        # --- one state table: per-source totals + the global offset ---
+        used = admitted.groupBy("source").agg(F.sum("n_tokens").alias("used_tokens"))
+        offset = admitted.agg(F.sum("n_tokens").alias("used_tokens")).select(
+            F.lit("").alias("source"), "used_tokens"
         )
-        sinks.parquet_overwrite_atomic(state_path)(new_totals, batch_id)
+        return _add(prior, used.unionByName(offset), ["source"], "used_tokens"), sharded
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(ingest))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_docs + ".state",
+        "source string, used_tokens long",
+        ingest,
+        out=out_docs,
+        available_now=available_now,
     )
 
 
@@ -2479,8 +2131,6 @@ def _committed_through(checkpoint: str) -> int:
     ingest_batch=-1 partition (ADVICE r9 high: an ungated fold lets a
     redelivered trigger join against its own folded rows and
     self-match at Jaccard 1.0)."""
-    import os
-
     commits = os.path.join(checkpoint, "commits")
     if not os.path.isdir(commits):
         return -1
@@ -2496,7 +2146,6 @@ def _folded_through(path: str) -> int:
     fold). The winnow probe compares this against its own batch id to
     detect the replay-after-UNGATED-compaction case."""
     import json
-    import os
 
     p = os.path.join(path, "ingest_batch=-1", "_folded_through.json")
     if not os.path.isfile(p):
@@ -2529,8 +2178,6 @@ def _finish_compaction(path: str, folded: list[str]) -> int:
     only past _COMPACTION_LOCK_STEAL_S (a crashed holder — re-entry is
     safe serially because every sub-step is idempotent)."""
     import json
-    import os
-    import shutil
     import time
 
     staging = os.path.join(path, "_staging_compact")
@@ -2587,8 +2234,6 @@ def _recover_compaction(path: str) -> int:
     the stream itself closes the crash window instead of waiting for
     the next offline compaction run. Concurrent entry (trigger vs
     offline compactor) is serialized inside _finish_compaction."""
-    import os
-
     manifest = os.path.join(path, "_compaction_manifest.json")
     if not os.path.isfile(manifest):
         return 0
@@ -2620,7 +2265,6 @@ def _compact_batch_dirs(
     inside ingest_batch=-1, carried forward across folds, so probes
     can detect a fold that DOES contain their own batch."""
     import json
-    import os
 
     if not os.path.isdir(path):
         return 0
@@ -2733,8 +2377,6 @@ def compact_minhash_index(
     them — it would candidate-join its own documents and self-match
     at Jaccard 1.0 (the probe's own-doc anti-join is the unconditional
     backstop). Returns the total number of batch partitions folded."""
-    import os
-
     max_b = (
         None if checkpoint is None else _committed_through(checkpoint)
     )
@@ -2812,10 +2454,6 @@ def minhash_dedup_job(
     (doc_id, text, source, n_prior_dups, n_local_dups,
     near_dup_suspect).
     """
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     from ..functions import hashing
     from ..operators.dedup import (
         JACCARD_THRESHOLD,
@@ -2829,29 +2467,11 @@ def minhash_dedup_job(
     bands_path = os.path.join(index_path, "bands")
     shingles_path = os.path.join(index_path, "shingles")
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.doc_id").isNotNull()
-            & F.col("j.text").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").alias("doc_id"),
-            F.col("j.text").alias("text"),
-            F.col("j.source").alias("source"),
-        )
+    docs = _decode_json(
+        raw,
+        "doc_id long, text string, source string",
+        ("doc_id", "text"),
+        ("doc_id", "text", "source"),
     )
 
     def probe_and_index(batch: DataFrame, batch_id: int) -> None:
@@ -3025,13 +2645,7 @@ def minhash_dedup_job(
             "overwrite"
         ).parquet(os.path.join(shingles_path, f"ingest_batch={batch_id}"))
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(probe_and_index))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
-    )
+    return _start(docs, sinks.pin_batch(probe_and_index), checkpoint, available_now)
 
 
 def weighted_sample_job(
@@ -3071,61 +2685,22 @@ def weighted_sample_job(
     even across the fence's edge cases (re-merging already-folded
     docs is a no-op by construction).
     """
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.textops import WEIGHTED_SAMPLE_K, ws_priority
 
     k = WEIGHTED_SAMPLE_K if k is None else k
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.text").isNotNull()
-            & F.col("j.doc_id").try_cast("long").isNotNull()
-        )
-        .select(
-            F.col("j.doc_id").try_cast("long").alias("doc_id"),
+    doc_id = F.col("j.doc_id").try_cast("long")
+    docs = _decode_json(
+        raw,
+        "doc_id string, text string, source string",
+        ("text", doc_id),
+        (
+            doc_id.alias("doc_id"),
             F.coalesce(F.col("j.source"), F.lit("unknown")).alias("source"),
             F.length("j.text").cast("long").alias("n_chars"),
-        )
-        .select(
-            "doc_id",
-            "source",
-            "n_chars",
-            ws_priority("doc_id", "n_chars").alias("priority"),
-        )
-    )
+        ),
+    ).withColumn("priority", ws_priority("doc_id", "n_chars"))
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: output dir already exact
-            prior = old.select("doc_id", "source", "n_chars", "priority")
-        else:
-            prior = spark.createDataFrame(
-                [], "doc_id long, source string, n_chars long, priority double"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         top = (
             prior.unionByName(batch)
             .groupBy("doc_id")
@@ -3134,40 +2709,18 @@ def weighted_sample_job(
             .orderBy("priority", "doc_id")
             .limit(k)
             .select("doc_id", "source", "n_chars", "priority")
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # snapshot + state share it
         )
-        top.write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = top.withColumn("last_batch_id", F.lit(batch_id))
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        # snapshot retention: each dir is only k rows, but "tiny
-        # forever" is still unbounded — keep the newest
-        # retain_snapshots dirs (every one a COMPLETE answer; pruning
-        # history can't affect state or replays, which the fence
-        # answers before this point). Prune AFTER the state swap so a
-        # crash between write and prune leaves extras, never a gap.
-        if retain_snapshots > 0:
-            import shutil
+        return top, lambda state: state  # the state IS the snapshot
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out + ".state",
+        "doc_id long, source string, n_chars long, priority double",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -3208,65 +2761,25 @@ def burst_flags_job(
     still counts such events; the stream has already published the
     trigger their frame belonged to.
     """
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from ..operators.analytics import BURST_MIN_EVENTS, BURST_WINDOW_S
 
     window_s = BURST_WINDOW_S if window_s is None else window_s
     min_events = BURST_MIN_EVENTS if min_events is None else min_events
-    state_path = out + ".state"
     win_us = window_s * 1_000_000
     late_us = late_s * 1_000_000
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    events = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.event_id").isNotNull()
-            & F.col("j.user_id").isNotNull()
-            & F.to_timestamp(F.col("j.ts")).isNotNull()
-        )
-        .select(
-            F.col("j.event_id").alias("event_id"),
-            F.col("j.user_id").alias("user_id"),
-            F.unix_micros(F.to_timestamp(F.col("j.ts"))).alias("epoch_us"),
-        )
+    ts = F.to_timestamp(F.col("j.ts"))
+    events = _decode_json(
+        raw,
+        "event_id long, user_id long, ts string",
+        ("event_id", "user_id", ts),
+        ("event_id", "user_id", F.unix_micros(ts).alias("epoch_us")),
     )
 
-    def flag(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: output dir already exact
-            prior = old.select("user_id", "epoch_us").localCheckpoint(
-                eager=True  # count pass + state merge share it
-            )
-            wm_row = prior.agg(
-                (F.max("epoch_us") - late_us).alias("wm")
-            ).first()
-            wm = wm_row["wm"] if wm_row["wm"] is not None else None
-        else:
-            prior = spark.createDataFrame([], "user_id long, epoch_us long")
-            wm = None
+    def flag(batch: DataFrame, prior: DataFrame, batch_id: int):
+        prior = prior.localCheckpoint(eager=True)  # count pass + state merge
+        wm = prior.agg((F.max("epoch_us") - late_us).alias("wm")).first()["wm"]
         fresh = (
             batch if wm is None else batch.filter(F.col("epoch_us") >= wm)
         ).localCheckpoint(eager=True)  # count pass + state merge
@@ -3287,29 +2800,25 @@ def burst_flags_job(
             .filter(F.col("n_burst") >= min_events)
             .select("event_id", "user_id", "n_burst")
         )
-        flagged.write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
         merged = prior.unionByName(fresh.select("user_id", "epoch_us"))
         horizon = merged.agg(
             (F.max("epoch_us") - (win_us + late_us)).alias("h")
         )
-        new_state = (
+        state = (
             merged.crossJoin(F.broadcast(horizon))  # 1-row normalizer
             .filter(F.col("epoch_us") > F.col("h"))
             .select("user_id", "epoch_us")
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
         )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
+        return state, flagged
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(flag))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        events,
+        checkpoint,
+        out + ".state",
+        "user_id long, epoch_us long",
+        flag,
+        out=out,
+        available_now=available_now,
     )
 
 
@@ -3354,61 +2863,27 @@ def stickiness_job(
     table in waves with late_days spanning the fixture and compares
     row for row.
     """
-    import os
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    events = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.user_id").isNotNull()
-            & F.to_timestamp(F.col("j.ts")).isNotNull()
-        )
-        .select(
-            F.to_date(F.to_timestamp(F.col("j.ts"))).alias("day"),
-            F.col("j.user_id").alias("user_id"),
-        )
+    ts = F.to_timestamp(F.col("j.ts"))
+    events = _decode_json(
+        raw,
+        "event_id long, user_id long, ts string",
+        ("user_id", ts),
+        (F.to_date(ts).alias("day"), "user_id"),
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: output dir already exact
-            prior = old.select("day", "user_id")
-        else:
-            prior = spark.createDataFrame([], "day date, user_id long")
-        merged = (
-            prior.unionByName(batch.select("day", "user_id"))
-            .distinct()
-            .localCheckpoint(eager=True)  # snapshot + trim share it
-        )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
+        merged = prior.unionByName(batch).distinct()
         maxd = merged.agg(F.max("day").alias("max_day"))
         state = (
             merged.crossJoin(F.broadcast(maxd))  # 1-row normalizer
             .filter(F.col("day") >= F.date_sub("max_day", 6 + late_days))
-            .select("day", "user_id", "max_day")
+            .select("day", "user_id")
         )
-        contributes = state.select(
+        return state, report
+
+    def report(state: DataFrame) -> DataFrame:
+        maxd = state.agg(F.max("day").alias("max_day"))
+        contributes = state.crossJoin(F.broadcast(maxd)).select(  # 1-row normalizer
             "user_id",
             "day",
             "max_day",
@@ -3416,7 +2891,7 @@ def stickiness_job(
                 F.sequence(F.col("day"), F.date_add("day", 6))
             ).alias("report_day"),
         )
-        snap = (
+        return (
             contributes.groupBy("report_day")
             .agg(
                 F.countDistinct("user_id").cast("long").alias("wau"),
@@ -3438,38 +2913,17 @@ def stickiness_job(
                 "wau",
                 (F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
             )
-            .coalesce(1)
         )
-        snap.write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.select("day", "user_id")
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        events,
+        checkpoint,
+        out + ".state",
+        "day date, user_id long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -3509,52 +2963,18 @@ def latency_quantiles_job(
     max), snapshot-written to ingest_batch=N like the seed-set and
     stickiness jobs (each snapshot is a complete answer).
     """
-    import os
+    from ..operators.analytics import fulfillment_latency_report
 
-    from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("l_orderkey", LongType()),
-            StructField("l_shipdate", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ship = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.l_orderkey").isNotNull()
-            & F.to_date(F.col("j.l_shipdate")).isNotNull()
-        )
-        .select(
-            F.col("j.l_orderkey").alias("l_orderkey"),
-            F.to_date(F.col("j.l_shipdate")).alias("l_shipdate"),
-        )
+    shipdate = F.to_date(F.col("j.l_shipdate"))
+    ship = _decode_json(
+        raw,
+        "l_orderkey long, l_shipdate string",
+        ("l_orderkey", shipdate),
+        ("l_orderkey", shipdate.alias("l_shipdate")),
     )
     dim = orders.select("o_orderkey", "o_orderdate", "o_orderpriority")
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select("priority", "days", "cnt")
-        else:
-            prior = spark.createDataFrame(
-                [], "priority string, days long, cnt long"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = (
             batch.join(dim, batch.l_orderkey == dim.o_orderkey)
             .select(
@@ -3566,64 +2986,18 @@ def latency_quantiles_job(
             .groupBy("priority", "days")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         )
-        hist = (
-            prior.unionByName(delta)
-            .groupBy("priority", "days")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
-        )
-        h = hist.withColumn(
-            "cum",
-            F.sum("cnt").over(Window.partitionBy("priority").orderBy("days")),
-        ).withColumn("n", F.sum("cnt").over(Window.partitionBy("priority")))
-        picks = {
-            "p50_days": "(n + 1) div 2",
-            "p90_days": "(9 * n + 9) div 10",
-            "p99_days": "(99 * n + 99) div 100",
-        }
-        snap = h.groupBy("priority").agg(
-            F.max("n").cast("long").alias("n_items"),
-            *[
-                F.min(F.when(F.col("cum") >= F.expr(pos), F.col("days")))
-                .cast("long")
-                .alias(name)
-                for name, pos in picks.items()
-            ],
-            F.max("days").cast("long").alias("max_days"),
-        )
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            hist.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        # snapshot retention (ADVICE r11): every ingest_batch=N dir is a
-        # COMPLETE answer, so a long-running stream keeps only the
-        # newest retain_snapshots of them — same pruning loop as the
-        # seed-set and stickiness jobs
-        if retain_snapshots > 0:
-            import shutil
+        state = _add(prior, delta, ["priority", "days"], "cnt")
+        return state, fulfillment_latency_report
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ship.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ship,
+        checkpoint,
+        out + ".state",
+        "priority string, days long, cnt long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -3658,116 +3032,31 @@ def balance_deciles_job(
     ingest_batch=N (newest retain_snapshots dirs kept — every
     snapshot is a complete answer).
     """
-    import os
+    from ..operators.analytics import balance_deciles_report
 
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    cust = _decode_json(
+        raw,
+        "c_custkey long, c_mktsegment string, c_acctbal double",
+        ("c_mktsegment", "c_acctbal"),
+        ("c_mktsegment", "c_acctbal"),
     )
 
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("c_custkey", LongType()),
-            StructField("c_mktsegment", StringType()),
-            StructField("c_acctbal", DoubleType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    cust = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.c_mktsegment").isNotNull()
-            & F.col("j.c_acctbal").isNotNull()
-        )
-        .select(
-            F.col("j.c_mktsegment").alias("c_mktsegment"),
-            F.col("j.c_acctbal").alias("c_acctbal"),
-        )
-    )
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select("c_mktsegment", "c_acctbal", "cnt")
-        else:
-            prior = spark.createDataFrame(
-                [], "c_mktsegment string, c_acctbal double, cnt long"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.groupBy("c_mktsegment", "c_acctbal").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
-        hist = (
-            prior.unionByName(delta)
-            .groupBy("c_mktsegment", "c_acctbal")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
-        )
-        h = hist.withColumn(
-            "cum",
-            F.sum("cnt").over(
-                Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
-            ),
-        ).withColumn(
-            "n", F.sum("cnt").over(Window.partitionBy("c_mktsegment"))
-        )
-        picks = {f"d{k}": f"({k} * n + 9) div 10" for k in range(1, 10)}
-        snap = h.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-            F.max("n").cast("long").alias("n_customers"),
-            F.min("c_acctbal").alias("min_bal"),
-            *[
-                F.min(
-                    F.when(F.col("cum") >= F.expr(pos), F.col("c_acctbal"))
-                ).alias(name)
-                for name, pos in picks.items()
-            ],
-            F.max("c_acctbal").alias("max_bal"),
-        )
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            hist.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
+        keys = ["c_mktsegment", "c_acctbal"]
+        return _add(prior, delta, keys, "cnt"), balance_deciles_report
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        cust.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        cust,
+        checkpoint,
+        out + ".state",
+        "c_mktsegment string, c_acctbal double, cnt long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -3803,73 +3092,31 @@ def revenue_gini_job(
     total_revenue, gini — NULL on a non-positive total, the batch
     op's guard), snapshot-written to ingest_batch=N with the newest
     `retain_snapshots` kept."""
-    import os
-
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DecimalType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from ..operators.analytics import revenue_gini_report
 
     if supplier_dim is None:
         raise ValueError(
             "revenue_gini_job needs the static supplier→nation dim "
             "(columns s_suppkey, nation)"
         )
-    state_path = out + ".state"
     REV = "decimal(28,4)"
-
-    schema = StructType(
-        [
-            StructField("l_suppkey", LongType()),
-            StructField("l_extendedprice", DecimalType(12, 2)),
-            StructField("l_discount", DecimalType(4, 2)),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    lines = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.l_suppkey").isNotNull()
-            & F.col("j.l_extendedprice").isNotNull()
-            & F.col("j.l_discount").isNotNull()
-        )
-        .select(
-            F.col("j.l_suppkey").alias("l_suppkey"),
+    lines = _decode_json(
+        raw,
+        "l_suppkey long, l_extendedprice decimal(12,2), l_discount decimal(4,2)",
+        ("l_suppkey", "l_extendedprice", "l_discount"),
+        (
+            "l_suppkey",
             (
                 F.col("j.l_extendedprice")
                 * (F.lit(1).cast("decimal(3,2)") - F.col("j.l_discount"))
             ).alias("r"),
-        )
+        ),
     )
     dim = supplier_dim.select(
         F.col("s_suppkey").cast("long").alias("s_suppkey"), "nation"
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select(
-                "nation", "s_suppkey", F.col("revenue").cast(REV).alias("revenue")
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], f"nation string, s_suppkey long, revenue {REV}"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = (
             batch.groupBy("l_suppkey")
             .agg(F.sum("r").alias("revenue"))
@@ -3883,66 +3130,18 @@ def revenue_gini_job(
                 F.col("revenue").cast(REV).alias("revenue"),
             )
         )
-        state = (
-            prior.unionByName(delta)
-            .groupBy("nation", "s_suppkey")
-            .agg(F.sum("revenue").cast(REV).alias("revenue"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
-        )
-        w = Window.partitionBy("nation").orderBy("revenue", "s_suppkey")
-        ranked = state.withColumn("i", F.row_number().over(w))
-        snap = (
-            ranked.groupBy("nation")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-                F.sum("revenue").alias("_sum_rev"),
-                F.sum(F.col("i") * F.col("revenue")).alias("_sum_i_rev"),
-            )
-            .select(
-                "nation",
-                "n_suppliers",
-                F.col("_sum_rev").cast("double").alias("total_revenue"),
-                F.when(
-                    F.col("_sum_rev") > 0,
-                    (
-                        F.lit(2) * F.col("_sum_i_rev")
-                        - (F.col("n_suppliers") + F.lit(1)) * F.col("_sum_rev")
-                    ).cast("double")
-                    / (F.col("n_suppliers") * F.col("_sum_rev")).cast(
-                        "double"
-                    ),
-                ).alias("gini"),
-            )
-        )
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
+        state = _add(prior, delta, ["nation", "s_suppkey"], "revenue", REV)
+        return state, revenue_gini_report
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        lines.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        lines,
+        checkpoint,
+        out + ".state",
+        f"nation string, s_suppkey long, revenue {REV}",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -3973,97 +3172,30 @@ def activity_gini_job(
     Output per trigger: one row per event_type (n_users,
     total_events, gini, top_decile_share), snapshot-written to
     ingest_batch=N with the newest `retain_snapshots` kept."""
-    import os
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.analytics import activity_gini_report
 
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ev = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.user_id").isNotNull()
-            & F.col("j.event_type").isNotNull()
-        )
-        .select(
-            F.col("j.event_type").alias("event_type"),
-            F.col("j.user_id").alias("user_id"),
-        )
+    ev = _decode_json(
+        raw,
+        "event_id long, user_id long, event_type string",
+        ("user_id", "event_type"),
+        ("event_type", "user_id"),
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select("event_type", "user_id", "c")
-        else:
-            prior = spark.createDataFrame(
-                [], "event_type string, user_id long, c long"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.groupBy("event_type", "user_id").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
-        state = (
-            prior.unionByName(delta)
-            .groupBy("event_type", "user_id")
-            .agg(F.sum("c").cast("long").alias("c"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
-        )
-        snap = activity_gini_report(state)
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
+        return _add(prior, delta, ["event_type", "user_id"], "c"), activity_gini_report
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ev,
+        checkpoint,
+        out + ".state",
+        "event_type string, user_id long, c long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -4085,88 +3217,22 @@ def _daily_count_snapshot_job(
     full-snapshot publish is the cheap and correct choice (the same
     argument as the quantile twins). State is CALENDAR-bounded: one
     long per day ever seen — decades < 10⁴ rows."""
-    import os
+    day = F.to_date(F.col("j.ts"))
+    ev = _decode_json(raw, "event_id long, ts string", (day,), (day.alias("day"),))
 
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
+        delta = batch.groupBy("day").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        return _add(prior, delta, ["day"], "cnt"), report
 
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ev = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.to_date(F.col("j.ts")).isNotNull()
-        )
-        .select(F.to_date(F.col("j.ts")).alias("day"))
-    )
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select("day", "cnt")
-        else:
-            prior = spark.createDataFrame([], "day date, cnt long")
-        delta = batch.groupBy("day").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-        state = (
-            prior.unionByName(delta)
-            .groupBy("day")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
-        )
-        snap = report(state)
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
-
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ev,
+        checkpoint,
+        out + ".state",
+        "day date, cnt long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -4269,61 +3335,17 @@ def ab_fdr_job(
     Output per trigger: one row per event type (n_a, conv_a, n_b,
     conv_b, z, m_tests, bh_rank, crit, rejected), snapshot-written to
     ingest_batch=N with the newest `retain_snapshots` kept."""
-    import os
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.analytics import fdr_bh_report
 
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ev = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.user_id").isNotNull()
-            & F.col("j.event_type").isNotNull()
-            & F.to_timestamp_ntz(F.col("j.ts")).isNotNull()
-        )
-        .select(
-            F.col("j.user_id").alias("user_id"),
-            F.col("j.event_type").alias("event_type"),
-            F.to_timestamp_ntz(F.col("j.ts")).alias("ts"),
-        )
+    ts = F.to_timestamp_ntz(F.col("j.ts"))
+    ev = _decode_json(
+        raw,
+        "event_id long, user_id long, event_type string, ts string",
+        ("user_id", "event_type", ts),
+        ("user_id", "event_type", ts.alias("ts")),
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger (min would no-op; skip anyway)
-            prior = old.select("user_id", "event_type", "min_ts")
-        else:
-            prior = spark.createDataFrame(
-                [], "user_id long, event_type string, min_ts timestamp_ntz"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.groupBy("user_id", "event_type").agg(
             F.min("ts").alias("min_ts")
         )
@@ -4331,38 +3353,18 @@ def ab_fdr_job(
             prior.unionByName(delta)
             .groupBy("user_id", "event_type")
             .agg(F.min("min_ts").alias("min_ts"))
-            .localCheckpoint(eager=True)  # snapshot + state share it
         )
-        snap = fdr_bh_report(state)
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
+        return state, fdr_bh_report
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ev,
+        checkpoint,
+        out + ".state",
+        "user_id long, event_type string, min_ts timestamp_ntz",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -4398,77 +3400,32 @@ def privacy_audit_job(
                                     ratio=tvd, flag=violates_t
     snapshot-written to ingest_batch=N with the newest
     `retain_snapshots` kept."""
-    import os
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ..operators.pii import (
         k_anonymity_report,
         l_diversity_report,
         t_closeness_report,
     )
 
-    state_path = out + ".state"
     qi = ["event_type", "day"]
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ev = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.user_id").isNotNull()
-            & F.col("j.event_type").isNotNull()
-            & F.to_timestamp_ntz(F.col("j.ts")).isNotNull()
-        )
-        .select(
-            F.col("j.event_type").alias("event_type"),
-            F.date_format(
-                F.to_timestamp_ntz(F.col("j.ts")), "yyyy-MM-dd"
-            ).alias("day"),
+    ts = F.to_timestamp_ntz(F.col("j.ts"))
+    ev = _decode_json(
+        raw,
+        "event_id long, user_id long, event_type string, ts string",
+        ("user_id", "event_type", ts),
+        (
+            "event_type",
+            F.date_format(ts, "yyyy-MM-dd").alias("day"),
             F.col("j.user_id").alias("sv"),
-        )
+        ),
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
-        if os.path.exists(state_path):
-            old = spark.read.parquet(state_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive state must not re-fold
-            prior = old.select(*qi, "sv", "n_cu")
-        else:
-            prior = spark.createDataFrame(
-                [], "event_type string, day string, sv long, n_cu long"
-            )
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.groupBy(*qi, "sv").agg(
             F.count(F.lit(1)).cast("long").alias("n_cu")
         )
-        state = (
-            prior.unionByName(delta)
-            .groupBy(*qi, "sv")
-            .agg(F.sum("n_cu").cast("long").alias("n_cu"))
-            .localCheckpoint(eager=True)  # snapshot (3 reads) + state
-        )
+        return _add(prior, delta, [*qi, "sv"], "n_cu"), report
+
+    def report(state: DataFrame) -> DataFrame:
         ns = F.lit(None).cast("string")
         nd = F.lit(None).cast("double")
         kanon = k_anonymity_report(
@@ -4504,36 +3461,17 @@ def privacy_audit_job(
             F.col("tvd").alias("ratio"),
             F.col("violates_t").alias("flag"),
         )
-        snap = kanon.unionByName(ldiv).unionByName(tclose)
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)  # materialize before the swap
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
+        return kanon.unionByName(ldiv).unionByName(tclose)
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ev,
+        checkpoint,
+        out + ".state",
+        "event_type string, day string, sv long, n_cu long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -4577,33 +3515,15 @@ def heavy_hitters_job(
     the same atomically-swapped file (rather than a sidecar) means a
     crash can never separate the fold from its fence. Readers of the
     counter set filter `token IS NOT NULL`."""
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql.types import StringType, StructField, StructType
 
     from ..functions import text as T
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-            StructField("source", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    docs = (
-        raw.select(parsed.alias("j"))
-        .filter(F.col("j._corrupt").isNull() & F.col("j.text").isNotNull())
-        .select(F.col("j.text").alias("text"))
+    docs = _decode_json(
+        raw, "doc_id string, text string, source string", ("text",), ("text",)
     )
 
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def merge(batch: DataFrame, prior: DataFrame, batch_id: int):
         spark = batch.sparkSession
         delta = (
             batch.select(F.explode(T.tokens("text")).alias("token"))
@@ -4614,25 +3534,19 @@ def heavy_hitters_job(
         n_delta = delta.agg(
             F.coalesce(F.sum("cnt"), F.lit(0)).cast("long")
         ).first()[0]
-        sinks.recover_sink(out_path)
-        n_prior = 0
-        if os.path.exists(out_path):
-            old = spark.read.parquet(out_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive fold, drop it
-            n_prior = old.agg(F.max("n_tokens")).first()[0] or 0
-            delta = (
-                old.filter(F.col("token").isNotNull())
-                .select("token", F.col("est").alias("cnt"))
-                .unionByName(delta)
-                .groupBy("token")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
+        n_prior = prior.agg(F.max("n_tokens")).first()[0] or 0
+        counts = _add(
+            prior.filter(F.col("token").isNotNull()).select(
+                "token", F.col("est").alias("cnt")
+            ),
+            delta,
+            ["token"],
+            "cnt",
+        )
         n_total = n_prior + n_delta
         w_rank = Window.orderBy(F.desc("cnt"), F.asc("token"))
         trimmed = (
-            delta.withColumn("rn", F.row_number().over(w_rank))
+            counts.withColumn("rn", F.row_number().over(w_rank))
             .withColumn(
                 "m",
                 F.coalesce(
@@ -4676,20 +3590,17 @@ def heavy_hitters_job(
             F.lit(None).cast("boolean").alias("guaranteed"),
             F.lit(None).cast("boolean").alias("is_candidate"),
         )
-        merged = (
-            report.unionByName(sentinel)
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)  # <= capacity + 1 rows: single file, atomic swap
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(out_path)(merged, batch_id)
+        # <= capacity + 1 rows: the skeleton's single-file state IS the sink
+        return report.unionByName(sentinel), None
 
-    return (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(merge))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        docs,
+        checkpoint,
+        out_path,
+        "token string, est long, n_tokens long, err_bound long, "
+        "guaranteed boolean, is_candidate boolean",
+        merge,
+        available_now=available_now,
     )
 
 
@@ -4708,8 +3619,8 @@ def activation_survival_job(
     IDENTICAL `survival_report` stage (parity by shared code). The
     distinguishing property in this job family: the state fold is
     min/min/max — IDEMPOTENT, not additive — so a redelivered trigger
-    re-folds to the same state and the job needs NO replay fence (the
-    last_batch_id column is kept as telemetry only). The re-estimate
+    re-folds to the same state: the skeleton's last_batch_id fence only
+    spares the re-fold work here, it guards no correctness. The re-estimate
     runs every trigger because censoring times legitimately move as
     the observation window extends: yesterday's censored user is
     today's day-3 activation.
@@ -4719,45 +3630,21 @@ def activation_survival_job(
     row per user ever seen — the stickiness job's envelope); the KM
     table is ≤horizon+1 rows. Output per trigger: the survival table,
     snapshot-written to ingest_batch=N."""
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.analytics import survival_report
 
-    state_path = out + ".state"
-
-    schema = StructType(
-        [
-            StructField("event_id", StringType()),
-            StructField("user_id", StringType()),
-            StructField("event_type", StringType()),
-            StructField("ts", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    ev = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.user_id").isNotNull()
-            & F.to_timestamp(F.col("j.ts")).isNotNull()
-        )
-        .select(
+    ts = F.to_timestamp(F.col("j.ts"))
+    ev = _decode_json(
+        raw,
+        "event_id string, user_id string, event_type string, ts string",
+        ("user_id", ts),
+        (
             F.col("j.user_id").cast("long").alias("user_id"),
-            F.col("j.event_type").alias("event_type"),
-            F.unix_micros(F.to_timestamp(F.col("j.ts"))).alias("us"),
-        )
+            "event_type",
+            F.unix_micros(ts).alias("us"),
+        ),
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        sinks.recover_sink(state_path)
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         delta = batch.groupBy("user_id").agg(
             F.min("us").alias("first_us"),
             F.min(
@@ -4765,55 +3652,34 @@ def activation_survival_job(
             ).alias("purchase_us"),
             F.max("us").alias("last_us"),
         )
-        if os.path.exists(state_path):
-            prior = spark.read.parquet(state_path).select(
-                "user_id", "first_us", "purchase_us", "last_us"
+        state = (
+            prior.unionByName(delta)
+            .groupBy("user_id")
+            .agg(
+                F.min("first_us").alias("first_us"),
+                F.min("purchase_us").alias("purchase_us"),
+                F.max("last_us").alias("last_us"),
             )
-            delta = (
-                prior.unionByName(delta)
-                .groupBy("user_id")
-                .agg(
-                    F.min("first_us").alias("first_us"),
-                    F.min("purchase_us").alias("purchase_us"),
-                    F.max("last_us").alias("last_us"),
-                )
-            )
-        state = delta.localCheckpoint(eager=True)
+        )
+        return state, report
+
+    def report(state: DataFrame) -> DataFrame:
         obs_end = state.agg(F.max("last_us").alias("end_us"))
-        snap = survival_report(
+        return survival_report(
             state.select("user_id", "first_us", "purchase_us"),
             obs_end,
             horizon_days,
         )
-        snap.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"ingest_batch={batch_id}")
-        )
-        new_state = (
-            state.withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        sinks.parquet_overwrite_atomic(state_path)(new_state, batch_id)
-        if retain_snapshots > 0:
-            import shutil
 
-            stale = sorted(
-                int(d.split("=")[1])
-                for d in os.listdir(out)
-                if d.startswith("ingest_batch=")
-            )[:-retain_snapshots]
-            for b in stale:
-                shutil.rmtree(
-                    os.path.join(out, f"ingest_batch={b}"),
-                    ignore_errors=True,
-                )
-
-    return (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        ev,
+        checkpoint,
+        out + ".state",
+        "user_id long, first_us long, purchase_us long, last_us long",
+        step,
+        out=out,
+        retain_snapshots=retain_snapshots,
+        available_now=available_now,
     )
 
 
@@ -4838,41 +3704,20 @@ def ols_monitor_job(
     Moments are ADDITIVE (decimal sums), so the sink carries
     last_batch_id and redelivered triggers are dropped (the countmin
     replay discipline, same fresh-checkpoint scoping caveat)."""
-    import os
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from ..operators.analytics import ols_estimates
 
-    schema = StructType(
-        [
-            StructField("rid", StringType()),
-            StructField("quantity", StringType()),
-            StructField("price", StringType()),
-            StructField("_corrupt", StringType()),
-        ]
-    )
-    parsed = F.from_json(
-        F.col("value"), schema, {"columnNameOfCorruptRecord": "_corrupt"}
-    )
-    rows = (
-        raw.select(parsed.alias("j"))
-        .filter(
-            F.col("j._corrupt").isNull()
-            & F.col("j.quantity").cast("double").isNotNull()
-            & F.col("j.price").cast("double").isNotNull()
-        )
-        .select(
-            F.col("j.quantity").cast("double").alias("l_quantity"),
-            F.col("j.price").cast("double").alias("l_extendedprice"),
-        )
+    qty = F.col("j.quantity").cast("double")
+    price = F.col("j.price").cast("double")
+    rows = _decode_json(
+        raw,
+        "rid string, quantity string, price string",
+        (qty, price),
+        (qty.alias("l_quantity"), price.alias("l_extendedprice")),
     )
     dec = "decimal(38,0)"
+    sums = ["sx", "sy", "sxy", "sxx", "syy"]
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def step(batch: DataFrame, prior: DataFrame, batch_id: int):
         x = F.col("l_quantity").cast("long")
         y = F.round(F.col("l_extendedprice") * 100).cast("long")
         delta = batch.agg(
@@ -4883,35 +3728,23 @@ def ols_monitor_job(
             F.sum((x * x).cast(dec)).alias("sxx"),
             F.sum((y * y).cast(dec)).alias("syy"),
         )
-        sinks.recover_sink(out_path)
-        if os.path.exists(out_path):
-            old = spark.read.parquet(out_path)
-            last = old.agg(F.max("last_batch_id")).first()[0]
-            if last is not None and last >= batch_id:
-                return  # redelivered trigger: additive moments, drop
-            cols = ["n", "sx", "sy", "sxy", "sxx", "syy"]
-            delta = (
-                old.select(*cols)
-                .unionByName(delta)
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    *[F.sum(c).cast(dec).alias(c) for c in cols[1:]],
-                )
+        moments = (
+            prior.select("n", *sums)
+            .unionByName(delta)
+            .agg(
+                F.sum("n").cast("long").alias("n"),
+                *[F.sum(c).cast(dec).alias(c) for c in sums],
             )
-        snap = (
-            ols_estimates(delta)
-            # 1-row x 1-row normalizer: estimates + refoldable moments
-            .crossJoin(delta.select("sx", "sy", "sxy", "sxx", "syy"))
-            .withColumn("last_batch_id", F.lit(batch_id))
-            .coalesce(1)  # one row: atomic swap, cheap read-back
-            .localCheckpoint(eager=True)
         )
-        sinks.parquet_overwrite_atomic(out_path)(snap, batch_id)
+        # 1-row x 1-row normalizer: estimates + refoldable moments
+        return ols_estimates(moments).crossJoin(moments.select(*sums)), None
 
-    return (
-        rows.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(step))
-        .option("checkpointLocation", checkpoint)
-        .trigger(**_trigger({}, available_now))
-        .start()
+    return _fold_job(
+        rows,
+        checkpoint,
+        out_path,
+        "n long, slope_cents_per_unit double, intercept_cents double, r2 double, "
+        + ", ".join(f"{c} {dec}" for c in sums),
+        step,
+        available_now=available_now,
     )

@@ -643,6 +643,7 @@ def test_minhash_index_cache_key_covers_tuning_params(monkeypatch, tmp_path):
     oracle-parity path. The build step is stubbed out — only the key
     derivation is under test."""
     import os
+    import uuid
 
     from edu_online_spark.functions import hashing
     from edu_online_spark.operators import dedup
@@ -661,7 +662,10 @@ def test_minhash_index_cache_key_covers_tuning_params(monkeypatch, tmp_path):
     )
     monkeypatch.setattr(dedup, "F", MagicMock())  # no live SparkContext needed
 
-    sf_dir = str(tmp_path)
+    # the key is derived from the path, and pytest reuses tmp_path names
+    # across sessions: a fresh name keeps an index dir some earlier run
+    # left under /tmp from answering the first call
+    sf_dir = str(tmp_path / uuid.uuid4().hex)
     base = dedup._minhash_index(None, sf_dir)
     assert dedup._minhash_index(None, sf_dir) == base  # stable + cached
     assert len(built) == 1  # second call reused the committed dir

@@ -9,7 +9,11 @@ greps for every round, made CI failures instead of review findings:
   loop until justified here;
 - every `crossJoin` is one of the known 1-row-broadcast normalizers
   or bounded tiny×tiny range joins — a new one is a potential
-  cartesian until justified here.
+  cartesian until justified here;
+- the stateful streaming folds' replay fence (the `last_batch_id`
+  column) and their `ingest_batch=` snapshot retention live only in
+  the fold skeleton, streaming/jobs.py `_fold_job` — a job that
+  hand-rolls either again has its own copy of the exactly-once rule.
 
 The pins are (file, enclosing-function) sets, stable across line
 edits; adding a site means adding it HERE with a reason, which is the
@@ -24,7 +28,8 @@ import os
 PKG = os.path.join(os.path.dirname(__file__), "..", "edu_online_spark")
 
 
-def _call_sites(attr: str) -> set[tuple[str, str]]:
+def _sites(match) -> set[tuple[str, str]]:
+    """(file, enclosing-function) of every AST node `match` accepts."""
     out: set[tuple[str, str]] = set()
     for root, _, files in os.walk(PKG):
         for f in sorted(files):
@@ -45,16 +50,24 @@ def _call_sites(attr: str) -> set[tuple[str, str]]:
                             if fn == "<module>"
                             else f"{fn}.{child.name}"
                         )
-                    if (
-                        isinstance(child, ast.Call)
-                        and isinstance(child.func, ast.Attribute)
-                        and child.func.attr == attr
-                    ):
+                    if match(child):
                         out.add((rel, fn))
                     walk(child, name)
 
             walk(tree, "<module>")
     return out
+
+
+def _call_sites(attr: str) -> set[tuple[str, str]]:
+    return _sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == attr
+    )
+
+
+def _constant_sites(value: str) -> set[tuple[str, str]]:
+    return _sites(lambda n: isinstance(n, ast.Constant) and n.value == value)
 
 
 def test_no_scalar_python_udfs():
@@ -159,9 +172,30 @@ CROSSJOIN_SITES = {
     ("edu_online_spark/streaming/jobs.py", "burst_flags_job.flag"),
     ("edu_online_spark/streaming/jobs.py", "curation_ingest_job.ingest"),
     ("edu_online_spark/streaming/jobs.py", "ols_monitor_job.step"),
+    # the 1-row max-day normalizer, once to trim the state horizon and
+    # once to bound the published report days
+    ("edu_online_spark/streaming/jobs.py", "stickiness_job.report"),
     ("edu_online_spark/streaming/jobs.py", "stickiness_job.step"),
 }
 
 
 def test_crossjoin_sites_are_the_known_normalizers():
     assert _call_sites("crossJoin") == CROSSJOIN_SITES
+
+
+# The one place that reads, checks and stamps the replay fence, and the
+# one place that prunes snapshot dirs, of every stateful fold job.
+FOLD_SKELETON = {("edu_online_spark/streaming/jobs.py", "_fold_job.step")}
+
+
+def test_replay_fence_only_in_the_fold_skeleton():
+    """The `last_batch_id` fence column is named only where the skeleton
+    reads it (the `F.max` fence check) and stamps it (the state swap)."""
+    assert _constant_sites("last_batch_id") == FOLD_SKELETON
+
+
+def test_snapshot_retention_only_in_the_fold_skeleton():
+    """A retention loop lists `ingest_batch=` dirs and removes trees;
+    the only function doing both is the skeleton's prune step."""
+    retention = _call_sites("rmtree") & _constant_sites("ingest_batch=")
+    assert retention == FOLD_SKELETON

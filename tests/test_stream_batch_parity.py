@@ -855,6 +855,64 @@ def test_activity_gini_replay_fence_prevents_double_count(
     assert total2 == len(rows), (total2, len(rows))
 
 
+def test_activity_gini_recovers_half_committed_state(spark, sf_dir, tmp_path):
+    """A crash between the state swap's two renames leaves `out.state`
+    absent with the complete state in `out.state.__staging__`. The next
+    trigger must promote it before reading, not restart from its own
+    wave: the newest snapshot equals the batch user_activity_gini over
+    all three waves, and every event is counted exactly once."""
+    import json
+
+    from edu_online_spark.operators.analytics import user_activity_gini
+
+    events = load_table(spark, sf_dir, "events")
+    rows = events.select("event_id", "user_id", "event_type").limit(600).collect()
+    lines = [
+        json.dumps(
+            {
+                "event_id": r["event_id"],
+                "user_id": r["user_id"],
+                "event_type": r["event_type"],
+            }
+        )
+        for r in rows
+    ]
+    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
+    os.makedirs(src, exist_ok=True)
+    third = len(lines) // 3
+    _replay(
+        jobs.activity_gini_job, spark, src, out, ckpt,
+        [lines[:third], lines[third : 2 * third]],
+    )
+    state = out + ".state"
+    os.rename(state, state + ".__staging__")
+    assert not os.path.exists(state)
+    with open(os.path.join(src, "wave2.log"), "w") as f:
+        f.write("\n".join(lines[2 * third :]) + "\n")
+    q = jobs.activity_gini_job(
+        file_stream(spark, src), out, ckpt, available_now=True
+    )
+    q.awaitTermination(120)
+    assert spark.read.parquet(state).agg(F.sum("c")).first()[0] == len(rows)
+    newest = max(
+        int(d.split("=")[1]) for d in os.listdir(out) if d.startswith("ingest_batch=")
+    )
+    cols = ["n_users", "total_events", "gini", "top_decile_share"]
+    streamed = {
+        r["event_type"]: tuple(r[c] for c in cols)
+        for r in spark.read.parquet(
+            os.path.join(out, f"ingest_batch={newest}")
+        ).collect()
+    }
+    batch = {
+        r["event_type"]: tuple(r[c] for c in cols)
+        for r in user_activity_gini(
+            spark.createDataFrame(rows).select("event_type", "user_id")
+        ).collect()
+    }
+    assert streamed == batch
+
+
 def test_daily_mad_streaming_equals_batch(spark, sf_dir, tmp_path):
     """Live robust volume screen: replay the events table in two
     waves; the final snapshot equals the batch daily_mad_anomalies row
