@@ -69,103 +69,77 @@ def _extended_modules():
 # round 2).
 _PREFIX_TAIL_BOUNDARY = "tpch"
 
-# Round-16 window rotation (plan re-emitted at the start of round 16 —
-# `python tools/rotation_plan.py 16` after CORRECTNESS_r15 landed —
-# matching the pre-staged COVERAGE.md "Round-16 rotation plan" and the
-# plan pinned by test_rotation_planner_reproduces_round16_plan at the
-# r15 close; applied per VERDICT r15 items #1-#2):
-#   1. hard cohort (deadline = 16): exactly the twenty-six round-15
-#      deferrals — the seven tail fillers the r15 changed/new/promoted
-#      names displaced plus the nineteen planner-deferred names, all
-#      last certified r11, certifying AT the deadline (legal under the
-#      exact-deadline model, proven by
-#      tests/test_registry.py::test_deferral_at_deadline_never_trips_staleness).
-#      They HEAD the window. This is the largest hard cohort to date
-#      and includes the round's ONE rows-only slot
-#      (`docs_winnowing_fingerprints_fast` — rows-only ops hit the
-#      same staleness bound; ROWS_ONLY_WINDOW_SLOTS names it);
-#   2. fillers: the planner's 24-name ascending-deadline list,
-#      truncated to 14 — the LAST TEN planner fillers
-#      (`corpus_drift_report` … `multimodal_frame_sample`, all
-#      deadline-17) are displaced by the changed/new/promoted names
-#      below and defer to their round-17 deadline (they MUST be in the
-#      r17 window; the post-edit greedy audit
-#      `tools/rotation_plan.py 17` confirms no deadline is missed);
-#   3. changed/new/promoted names take slots the round they land
-#      (staleness-at-birth / changed-query rule):
-#      multimodal_consensus_neardup re-derives its plan this round
-#      (hash-grain probe fusion, VERDICT r15 #3) and
-#      dedup_diagnostics_composed drops its redundant re-checkpoint
-#      (ADVICE r15 #2); the EIGHT ORACLE_R17 names land at their
-#      scheduled bound (VERDICT r15 #2 — the largest batch yet),
-#      all parity-rehearsed at sf0.01 every round since r13. Queue
-#      entering r17 is 8 (R18=5, R19=3).
+# Round-17 window rotation, applied one round late. COVERAGE.md's
+# "Round-17 rotation plan" pre-staged this window (the plan pinned by
+# tests/test_registry.py::test_rotation_planner_reproduces_round17_plan),
+# but the registry edit never landed: round 17 re-certified round 16's
+# window (CORRECTNESS_r16.json and CORRECTNESS_r17.json hold the same 50
+# names), so the thirty-seven round-12-certified names below fell past
+# the staleness bound once r17 became the newest driver file. The list
+# is the verbatim output of `python tools/rotation_plan.py 17
+# --emit-registry`:
+#   1. hard cohort: the 37 round-16 deferrals, last certified r12,
+#      heading the window;
+#   2. fillers: the 13 most urgent remaining names by ascending
+#      deadline, then registry order.
+# No window slot is rows-only (tests/test_registry.py's
+# ROWS_ONLY_WINDOW_SLOTS is empty), and the R18 promotions are not
+# placed: this round registers no new queries.
 # Names are validated against the assembled registry — a typo or a
 # renamed query fails loudly rather than silently ceding its slot.
 _WINDOW_PRIORITY = [
-    # 1: hard cohort at its r16 deadline — must head the window
-    "corpus_token_df",
-    "text_tfidf_top_terms",
-    "corpus_boilerplate_ngrams",
-    "text_boilerplate_fraction",
-    "text_normalized",
-    "chunks_packed",
-    "docs_quality_tiered_sample",
-    "docs_train_val_test",
-    "docs_token_budget_cap",
-    "corpus_shard_manifest",
-    "docs_ngram_novelty",
-    "source_vocab_overlap",
-    "docs_winnowing_fingerprints",
-    "docs_winnowing_overlap",
-    "docs_length_quantiles_exact",
-    "corpus_vocab_coverage",
-    "docs_weighted_sample",
-    "events_k_anonymity",
-    "docs_winnowing_fingerprints_fast",  # rows-only (declared)
-    "events_stratified_sample",
-    "events_profile",
-    "events_props_k_stats",
-    "daily_revenue_ma7",
-    "events_seasonal_residuals",
-    "events_burst_flags",
-    "events_weekly_active_users",
-    # 2: fillers by ascending deadline then registry order (planner
-    #    order, first 13 of 24 — the 14th, corpus_snapshot_diff, is
-    #    displaced by the new composed winnowing entry below and
-    #    defers to its round-17 deadline with the other ten)
-    "dedup_cross_corpus",
-    "dedup_semantic_keep",
-    "retrieval_negative_samples",
-    "dedup_ngram_jaccard_prefix",
-    "ann_recall_report",
-    "ann_all_pairs_recall",
-    "sim_knn_ivf_probe_recall",
-    "hybrid_search_rrf",
-    "docs_vocab_encoded",
-    "corpus_mixture_plan",
-    "docs_gopher_quality",
-    "corpus_dataset_card",
-    "docs_stratified_sample",
-    # 3a: changed THIS round — the hash-grain consensus probe fusion
-    #     (VERDICT r15 #3) and the composed diagnostics checkpoint fix
-    #     (ADVICE r15 #2) take slots the round they change (the
-    #     changed-query rule in test_driver_window_contract)
-    "multimodal_consensus_neardup",
-    "dedup_diagnostics_composed",
-    # 3b: NEW this round — the composed winnowing-diagnostics entry
-    #     (VERDICT r15 #4), certified at birth
-    "winnowing_diagnostics_composed",
-    # 3c: ORACLE_R17 promotions landing at their scheduled bound
-    #     (VERDICT r15 #2 — the eight-op batch, largest landing yet)
-    "events_cusum_level_shift",
-    "events_ab_conversion_ztest",
-    "corpus_token_heavy_hitters",
-    "text_lang_kappa",
-    "docs_quality_spearman",
-    "dedup_pair_transitivity",
-    "ann_label_ndcg",
-    "events_l_diversity",
+    # 1: hard cohort at its r17 deadline — must head the window
+    "corpus_snapshot_diff",
+    "corpus_drift_report",
+    "docs_quality_budget_fill",
+    "docs_winnowing_clusters",
+    "docs_winnowing_cross_corpus",
+    "text_pii_source_stats",
+    "text_pii_redacted",
+    "text_url_domains",
+    "multimodal_decoded_meta",
+    "multimodal_media_summary",
+    "multimodal_frame_sample",
+    "multimodal_resized",
+    "multimodal_audio_features",
+    "multimodal_payload_dedup",
+    "events_hll_rollup",
+    "events_theta_overlap",
+    "corpus_token_countmin",
+    "tpch_q7_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q10_returned_items",
+    "tpch_q15_top_supplier",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q9_profit_by_nation",
+    "tpch_q11_important_parts",
+    "events_distinct_users_approx",
+    "events_funnel",
+    "events_daily_anomalies",
+    "events_cohort_retention",
+    "lineitem_price_quantiles_approx",
+    "data_quality_checks",
+    "docs_length_histogram",
+    "events_time_grain_rollup",
+    "events_value_percentiles",
+    "customer_record_linkage_multipass",
+    "events_inter_arrival_profile",
+    "events_scd2_status",
+    "purchase_training_examples",
+    # 2: fillers by ascending deadline then registry order
+    "register_platform_counts",
+    "register_windowed_counts",
+    "register_sliding_counts",
+    "register_cumulative_daily",
+    "quiz_mastery",
+    "quiz_mastery_approx",
+    "page_props_decode",
+    "page_flow",
+    "archival_daily_counts",
+    "source_dup_matrix",
+    "dedup_savings_by_source",
+    "embeddings_label_centroids",
+    "hybrid_search_rrf_lsh",
 ]
 
 

@@ -59,16 +59,14 @@ def test_broken_extension_does_not_kill_core(monkeypatch):
     assert "dedup" in names and "textops" in names  # the rest survived
 
 
-# Round 16 rotates to the 26-row hard cohort (the round-15 deferrals
-# AT their deadline — the largest cohort to date, including the one
-# rows-only name below) + 13 planner fillers + the two changed queries
-# (consensus probe fusion, composed-diagnostics checkpoint fix) + the
-# new composed winnowing-diagnostics entry + the eight ORACLE_R17
-# promotions landing at their scheduled bound (VERDICT r15 #2/#3/#4,
-# ADVICE r15 #2). Exactly ONE window slot is rows-only this round —
-# the winnowing fast variant hit its own staleness deadline — exactly
-# as the round-15 rotation plan pre-staged.
-ROWS_ONLY_WINDOW_SLOTS: set[str] = {"docs_winnowing_fingerprints_fast"}
+# The round-17 rotation (applied one round late, see the comment above
+# registry._WINDOW_PRIORITY) is the 37-name round-12-certified hard
+# cohort plus 13 planner fillers, every one of them oracle-backed:
+# COVERAGE.md's round-17 plan has ZERO rows-only slots, and
+# test_rotation_planner_reproduces_round17_plan pins
+# rows_only_slots == []. The declaration must match the applied window,
+# so no window slot may be rows-only.
+ROWS_ONLY_WINDOW_SLOTS: set[str] = set()
 
 
 def test_driver_window_contract():
@@ -136,7 +134,7 @@ def test_rotation_staleness_bound():
 
 def test_rotation_planner_reproduces_round17_plan():
     """tools/rotation_plan.py must reproduce the committed round-17
-    arithmetic (pre-staged with the r16 registry edit in-tree): the
+    arithmetic (replayed from the CORRECTNESS files up to r16): the
     hard cohort is EXACTLY the thirty-seven round-16 deferrals — the
     eleven tail fillers the r16 changed/new/promoted names displaced
     (consensus probe fusion + composed-diagnostics checkpoint fix +

@@ -4,9 +4,14 @@ The registry outgrew casual slot arithmetic at round 12 (a 50-slot
 window over 200+ queries cycles with zero organic slack, and every new
 op pushes a deferral toward someone's hard staleness bound), so the
 plan COVERAGE.md used to compute by hand in each round's close-out is
-a tool: read the CORRECTNESS_r*.json history the driver writes, assume
-the current `_WINDOW_PRIORITY` lands this round, and emit the
-next-round window.
+a tool: read the CORRECTNESS_r*.json history the driver writes and emit
+the window for round N. What landed at round N-1 comes from the
+driver's own file when CORRECTNESS_r{N-1}.json exists: the history is
+cut at N-1 and the in-tree `_WINDOW_PRIORITY` is ignored, so a plan
+for a round whose predecessor already landed replays the same way
+before and after the window is rotated. Only when round N-1 has not
+landed yet (N = newest + 2, the round after the one in progress) is
+the in-tree window assumed to land at N-1.
 
 Deadline model (round 12 rewrite — the round-11 planner was one round
 MORE conservative than the contract it enforced, which made round 13
@@ -69,12 +74,17 @@ BOUND = 5  # tests/test_registry.py STALENESS_BOUND_ROUNDS
 AUDIT_HORIZON = 6  # simulated rounds; > one full registry cycle
 
 
-def last_seen_history(root: str) -> tuple[dict[str, int], int]:
+def last_seen_history(root: str, upto: int | None = None
+                      ) -> tuple[dict[str, int], int]:
+    """Latest certifying round per query, and the newest round, over
+    the CORRECTNESS_r*.json files of rounds <= upto (all when None)."""
     files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
     seen: dict[str, int] = {}
     latest = 0
     for f in files:
         rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
+        if upto is not None and rnd > upto:
+            continue
         latest = max(latest, rnd)
         for name in json.load(open(f)):
             seen[name] = max(seen.get(name, 0), rnd)
@@ -147,14 +157,18 @@ def plan(next_round: int | None = None, root: str | None = None) -> dict:
     from edu_online_spark import registry
 
     root = root or os.path.join(os.path.dirname(__file__), "..")
-    seen, latest = last_seen_history(root)
+    _, latest = last_seen_history(root)
     if next_round is None:
         next_round = latest + 2  # current round lands as latest+1
-    # ADVICE r12: the model below credits the IN-TREE window with
-    # landing at next_round - 1. That is only true for the round the
-    # in-tree window actually models (newest CORRECTNESS + 1); planning
-    # further ahead would silently mis-date those certifications, so
-    # fail loudly instead.
+    # ADVICE r12: when round next_round - 1 has not landed yet, the
+    # model below credits the IN-TREE window with landing at
+    # next_round - 1. That is only true for the round the in-tree
+    # window actually models (newest CORRECTNESS + 1); planning further
+    # ahead would silently mis-date those certifications, so fail
+    # loudly instead. When round next_round - 1 has landed, its
+    # CORRECTNESS file says what it certified: replay the history up to
+    # that round and leave the in-tree window (which may already be
+    # the next rotation) out of it.
     if next_round > latest + 2:
         raise SystemExit(
             f"plan({next_round}) is more than one round ahead of the "
@@ -162,14 +176,15 @@ def plan(next_round: int | None = None, root: str | None = None) -> dict:
             f"would be mis-credited with landing at r{next_round - 1}. "
             f"Re-run once the intervening CORRECTNESS files exist."
         )
-    landing = next_round - 1  # the round whose window is now in-tree
+    landing = next_round - 1
 
     names = list(registry.queries())
     oracles = set(registry.oracle_sql())
     order = {n: i for i, n in enumerate(names)}
-    effective = dict(seen)
-    for n in names[:WINDOW]:  # assume the in-tree window lands
-        effective[n] = max(effective.get(n, 0), landing)
+    effective, _ = last_seen_history(root, upto=landing)
+    if landing > latest:
+        for n in names[:WINDOW]:  # assume the in-tree window lands
+            effective[n] = landing
     missing = [n for n in names if n not in effective]
     if missing:
         raise SystemExit(
